@@ -3,26 +3,29 @@
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload sql_dml --seed 1 --seconds 12 --trace 0
+    python3 perfbench/run.py --workload sql_dml --seed 1 --seconds 8 --trace 0
     python3 perfbench/run.py --workload all            # every workload in turn
+    python3 perfbench/run.py --workload query_sweep --record-sweep-reference
 
 Builds the program in the checkout from source together with the harness
-in perfbench/ (sbt, offline; once per source hash), runs the workload in one
-JVM on Spark local[min(4, cpus)], runs its output checks, writes the full
-results to .bench_build/results/<workload>-s<seed>-t<trace>.json, prints one
-compact line per workload and, last, one JSON line with the metrics
-BENCHMARK.json names: end-to-end metrics with --trace 0, per-layer metrics
-with --trace 1. Exits non-zero when a check fails or nothing can be built.
+in perfbench/ (sbt, offline; again only when the sources change), runs the
+workload in one JVM on Spark local[min(4, cpus)], runs its output checks,
+writes the full results to .bench_build/results/<workload>-s<seed>-t<trace>
+.json, prints one compact line per workload and, last, one JSON line with
+the metrics BENCHMARK.json names: end-to-end metrics with --trace 0,
+per-layer metrics with --trace 1. Exits non-zero when a check fails or
+nothing can be built.
 
-Workloads: sql_dml and cdc_stream (listed in BENCHMARK.json) and
-corpus_prep (run by name or through --workload all). perfbench/layers.json
-says what every metric means and which end-to-end metric each per-layer
-metric should move; perfbench/baseline.json holds the numbers measured when
-the benchmark was added.
+Workloads: sql_dml, cdc_stream and query_sweep. perfbench/layers.json says
+what every metric means and which end-to-end metric each per-layer metric
+should move; perfbench/baseline.json holds the numbers measured when the
+benchmark was added. --record-sweep-reference rewrites the query_sweep
+result hashes in perfbench/sweep_reference.json from the checkout's program.
 """
 import argparse
 import hashlib
 import json
+import math
 import os
 import shutil
 import signal
@@ -33,7 +36,7 @@ import time
 BENCH = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(BENCH)
 BUILD = os.path.join(ROOT, ".bench_build")
-WORKLOADS = ["sql_dml", "cdc_stream", "corpus_prep"]
+WORKLOADS = ["sql_dml", "cdc_stream", "query_sweep"]
 BUILD_TIMEOUT_S = 840
 RUN_TIMEOUT_S = 170
 HEAP = "3g"
@@ -74,16 +77,20 @@ def source_hash():
 
 
 def build():
-    """Compiles program and harness once per source hash; returns the
-    runtime classpath."""
+    """Compiles program and harness unless the last build was of the same
+    sources; returns the runtime classpath and the source hash."""
     if not (os.path.isfile(os.path.join(ROOT, "build.sbt"))
             and os.path.isdir(os.path.join(ROOT, "src", "main", "scala"))):
         fail("no program source (build.sbt, src/main/scala) next to perfbench/")
     tag = source_hash()
-    cp_file = os.path.join(BUILD, f"classpath-{tag}.txt")
+    # one marker for the one set of class directories sbt writes: sources
+    # that differ from the last build's, even an older state, rebuild
+    cp_file = os.path.join(BUILD, "classpath.txt")
     if os.path.isfile(cp_file):
         with open(cp_file) as f:
-            return f.read().strip(), tag
+            built, cp = (f.read().split("\n", 1) + [""])[:2]
+        if built == tag and cp.strip():
+            return cp.strip(), tag
     os.makedirs(BUILD, exist_ok=True)
     env = dict(os.environ)
     env.setdefault("COURSIER_MODE", "offline")
@@ -98,14 +105,15 @@ def build():
                  BENCH, env, BUILD_TIMEOUT_S)
     if p is None or p[0] != 0:
         if p:
-            sys.stderr.write(p[1][-4000:])
+            errors = [l for l in p[1].splitlines() if l.startswith("[error]")]
+            sys.stderr.write("\n".join(errors[:40] or [p[1][-4000:]]) + "\n")
         fail("build failed")
     cp = [l for l in p[1].splitlines()
           if l.startswith("/") and ".jar" in l and "[" not in l]
     if not cp:
         fail("build printed no classpath")
     with open(cp_file, "w") as f:
-        f.write(cp[-1])
+        f.write(f"{tag}\n{cp[-1]}")
     print(f"perfbench: built {tag} in {time.time() - t0:.0f} s", file=sys.stderr)
     return cp[-1], tag
 
@@ -153,7 +161,7 @@ def revision():
     return None
 
 
-def run_one(workload, seed, seconds, trace, cp, tag, deadline):
+def run_one(workload, seed, seconds, trace, cp, tag, deadline, record=None):
     cores = min(4, len(os.sched_getaffinity(0)))
     work = os.path.join(BUILD, "work", f"{workload}-{os.getpid()}")
     results_dir = os.path.join(BUILD, "results")
@@ -168,7 +176,8 @@ def run_one(workload, seed, seconds, trace, cp, tag, deadline):
                               "--workload", workload, "--seed", str(seed),
                               "--seconds", str(seconds), "--trace", str(trace),
                               "--cores", str(cores), "--work", work,
-                              "--out", out_file]
+                              "--out", out_file] + \
+        (["--record", record] if record else [])
     load0, stat0 = os.getloadavg(), cpu_ticks()
     p = run_proc(cmd, ROOT, dict(os.environ), max(10, deadline - time.time()))
     load1, stat1 = os.getloadavg(), cpu_ticks()
@@ -194,24 +203,51 @@ def run_one(workload, seed, seconds, trace, cp, tag, deadline):
         base = os.path.join(results_dir, f"{workload}-s{seed}-t0.json")
         if os.path.isfile(base):
             with open(base) as f:
-                untraced = json.load(f)["end_to_end"]
-            res["trace_overhead"] = {
-                k: v - untraced[k] for k, v in res["end_to_end"].items()
-                if k in untraced and v is not None and untraced[k] is not None}
+                base_res = json.load(f)
+            # only an untraced run of the same build and seed is comparable
+            if base_res.get("env", {}).get("source_hash") == tag:
+                untraced = base_res["end_to_end"]
+                res["trace_overhead"] = {
+                    k: v - untraced[k] for k, v in res["end_to_end"].items()
+                    if isinstance(v, (int, float)) and
+                    isinstance(untraced.get(k), (int, float))}
     with open(out_file, "w") as f:
         json.dump(res, f, indent=1)
     return res, out_file
 
 
-def compact(res):
-    vals = dict(res["named"])
-    vals["setup_s"] = res["end_to_end"]["setup_s"]
-    vals["live_heap_mb"] = res["end_to_end"]["live_heap_mb"]
-    vals["error_rate"] = res["error_rate"]
-    parts = [f"{k}={v:.4g}" for k, v in vals.items() if v is not None]
+def metric_aliases(spec):
+    """Reads perfbench/layers.json, which says what each metric means;
+    fails unless it describes exactly the metrics BENCHMARK.json names.
+    Returns, per workload, the workload's own name of each shared
+    end-to-end metric (op_p50_s is merge_p50_s on sql_dml, ...)."""
+    with open(os.path.join(BENCH, "layers.json")) as f:
+        doc = json.load(f)
+    for key in ("end_to_end", "per_layer"):
+        named = [m["name"] for m in spec[key]]
+        if sorted(named) != sorted(doc[key]):
+            fail(f"perfbench/layers.json {key} differs from BENCHMARK.json: "
+                 f"{sorted(set(named) ^ set(doc[key]))}")
+    aliases = {}
+    for metric, d in doc["end_to_end"].items():
+        for w, alias in d.get("as", {}).items():
+            aliases.setdefault(w, {})[metric] = alias
+    return aliases
+
+
+def compact(res, aliases):
+    """One line: the end-to-end values under the workload's own names
+    (from perfbench/layers.json), then the median of every operation kind."""
+    names = aliases.get(res["workload"], {})
+    parts = [f"{names.get(k, k)}={v:.4g}" for k, v in res["end_to_end"].items()
+             if isinstance(v, (int, float))]
+    parts.append(f"error_rate={res['error_rate']:.3g}")
+    ops = [f"{k}={v['p50_s']:.3g}s/{v['n']}" for k, v in res["operations"].items()
+           if isinstance(v["p50_s"], (int, float))]
     return (f"{res['workload']} {'ok' if res['correct'] else 'WRONG'} "
             f"seed={res['seed']} {res['env']['local']} "
-            f"ops={res['attempted']}/{res['failed']}f " + " ".join(parts))
+            f"ops={res['attempted']}/{res['failed']}f " + " ".join(parts) +
+            " | p50 " + " ".join(ops))
 
 
 def main():
@@ -220,6 +256,9 @@ def main():
     ap.add_argument("--seed", type=int, default=1)
     ap.add_argument("--seconds", type=int, default=15)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
+    ap.add_argument("--record-sweep-reference", action="store_true",
+                    help="rewrite perfbench/sweep_reference.json from this "
+                         "checkout's program instead of running a workload")
     a = ap.parse_args()
     t0 = time.time()
 
@@ -230,29 +269,37 @@ def main():
         spec = json.load(f)
     key = "per_layer" if a.trace else "end_to_end"
     wanted = [(m["name"], m["unit"]) for m in spec[key]]
+    aliases = metric_aliases(spec)
 
     cp, tag = build()
+    if a.record_sweep_reference:
+        ref = os.path.join(BENCH, "sweep_reference.json")
+        res, _ = run_one("query_sweep", a.seed, a.seconds, 0, cp, tag,
+                         time.time() + 900, record=ref)
+        print(f"perfbench: wrote {os.path.relpath(ref, ROOT)}", file=sys.stderr)
+        sys.exit(0)
     names = WORKLOADS if a.workload == "all" else [a.workload]
     metrics, correct, attempted, failed = {}, True, 0, 0
     for w in names:
         res, path = run_one(w, a.seed, a.seconds, a.trace, cp, tag,
                             time.time() + RUN_TIMEOUT_S)
         got = res["per_layer" if a.trace else "end_to_end"]
-        missing = [n for n, _ in wanted if got.get(n) is None]
+        missing = [n for n, _ in wanted if not isinstance(got.get(n), (int, float))
+                   or not math.isfinite(got[n])]
         if missing:
             fail(f"{w}: no value for {', '.join(missing)}", 3)
         prefix = f"{w}." if a.workload == "all" else ""
         for n, u in wanted:
-            # per-layer values to the microsecond / thousandth keep the
-            # traced line short; end-to-end values keep every digit
-            v = round(got[n], 3) if a.trace else got[n]
+            # per-layer values to four significant digits keep the traced
+            # line short; end-to-end values keep every digit
+            v = float(f"{got[n]:.4g}") if a.trace else got[n]
             metrics[prefix + n] = {"value": v, "unit": u}
         correct &= bool(res["correct"])
         attempted += res["attempted"]
         failed += res["failed"]
         print(f"perfbench: {w} results in {os.path.relpath(path, ROOT)}",
               file=sys.stderr)
-        print(compact(res), flush=True)
+        print(compact(res, aliases), flush=True)
     print(json.dumps({"correct": correct, "attempted": attempted,
                       "failed": failed, "metrics": metrics},
                      separators=(",", ":")), flush=True)

@@ -2,30 +2,10 @@ package perfbench
 
 import scala.collection.immutable.ListMap
 
-/** Per-layer metrics every traced run reports. Layers a workload does not
-  * reach read 0. Spark and driver figures are per round of the workload's
-  * loop (a DML round, a CDC batch, a corpus pass). */
+/** Per-layer metrics of a traced run. Spark and driver figures are per
+  * round of the workload's loop (a DML round, a CDC batch, a corpus pass,
+  * a sweep pass). */
 object Layers {
-  val names: Seq[String] = Seq(
-    "jobs.count", "jobs.tasks", "jobs.busy_ms", "jobs.input_records",
-    "jobs.shuffle_write_bytes", "jobs.spill_bytes", "jobs.gc_ms",
-    "driver.gap_ms", "driver.unattributed_ms",
-    "catalyst.phase_ms", "plans.qe_per_stmt", "plans.parse_ms",
-    "codegen.compiles", "codegen.compile_ms",
-    "upsert.manifest_read_ms", "upsert.catalog_resolve_ms",
-    "upsert.versions_per_stmt", "upsert.buckets_touched",
-    "upsert.files_added", "upsert.bytes_added", "upsert.live_files",
-    "sources.records_per_point_row", "sources.api_point_ms",
-    "stream.add_batch_ms", "stream.wal_commit_ms", "stream.commit_offsets_ms",
-    "stream.latest_offset_ms", "stream.get_batch_ms",
-    "stream.query_planning_ms", "stream.rows_per_trigger",
-    "llm.minhash_ms", "llm.lsh_ms", "llm.verify_ms", "llm.cluster_ms",
-    "llm.shards_ms", "llm.candidate_pairs", "llm.verified_edges",
-    "llm.lsh_precision", "llm.dropped_buckets", "llm.docs_out",
-    "llm.cluster_jobs",
-    "merge.wall_ms", "merge.jobs_busy_ms", "merge.catalyst_ms",
-    "merge.layer_calls_ms", "merge.unattributed_ms", "merge.jobs",
-    "trace.op_p50_s")
 
   /** Spark-execution, planning and driver-gap metrics from the traced
     * operations `ops`, per round. `attributedMs` is the time of the timed
@@ -54,9 +34,11 @@ object Layers {
   /** Median of a per-operation series, 0 when empty. */
   def med(xs: Seq[Double]): Double = if (xs.isEmpty) 0.0 else Stats.median(xs)
 
-  def complete(m: Map[String, Double]): ListMap[String, Double] = {
-    val extra = m.keySet -- names
-    require(extra.isEmpty, s"undeclared per-layer metrics ${extra.mkString(",")}")
-    ListMap(names.map(n => n -> m.getOrElse(n, 0.0)): _*)
-  }
+  /** Splits a workload's per-layer values into the metrics BENCHMARK.json
+    * declares, in its order (a layer the workload does not reach reads 0),
+    * and the rest, which go to the results file only. */
+  def complete(m: Map[String, Double], declared: Seq[String])
+      : (ListMap[String, Double], ListMap[String, Double]) =
+    (ListMap(declared.map(n => n -> m.getOrElse(n, 0.0)): _*),
+      ListMap((m -- declared).toSeq.sortBy(_._1): _*))
 }

@@ -1,10 +1,12 @@
 package perfbench
 
 import java.io.File
-import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 import scala.collection.immutable.ListMap
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
 
 import graft.GraftSession
 
@@ -13,8 +15,20 @@ import graft.GraftSession
   * result line.
   *
   * Usage: perfbench.Main --workload W --seed N --seconds S --trace 0|1
-  *   --cores C --work DIR --out FILE */
+  *   --cores C --work DIR --out FILE [--record FILE]
+  *
+  * Run from the checkout root: the per-layer metric names come from
+  * BENCHMARK.json there, and workloads read their reference files from
+  * perfbench/. `--record` makes query_sweep write its reference result
+  * hashes to FILE instead of checking against them. */
 object Main {
+  val json: JsonMapper = JsonMapper.builder().addModule(DefaultScalaModule).build()
+
+  /** The per-layer metric names BENCHMARK.json declares, in its order. */
+  def declaredLayers(): Seq[String] =
+    json.readTree(new File("BENCHMARK.json")).get("per_layer").elements().asScala
+      .map(_.get("name").asText).toSeq
+
   def main(args: Array[String]): Unit = {
     val opt = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     val name = opt("workload")
@@ -26,6 +40,7 @@ object Main {
     val cores = opt("cores").toInt
     val work = new File(opt("work")).getAbsoluteFile
     work.mkdirs()
+    val declared = declaredLayers()
 
     val t0 = System.nanoTime()
     val spark = GraftSession.builder(cores).master(s"local[$cores]")
@@ -38,28 +53,31 @@ object Main {
     val sessionS = (System.nanoTime() - t0) / 1e9
 
     val tracer = if (trace) Some(new Tracer(spark)) else None
-    val out = try wl.run(Ctx(spark, seed, seconds, tracer, work, cores))
+    val out = try wl.run(Ctx(spark, seed, seconds, tracer, work, cores, opt.get("record")))
     finally tracer.foreach(_.close())
-    val e2e = out.e2e
-    val correct = out.checks.forall(_.ok)
+    val checks = out.checks :+ Check("no_failed_operations", out.ops.failed == 0,
+      s"${out.ops.failed} of ${out.ops.attempted} operations failed")
+    val (perLayer, perLayerMore): (ListMap[String, Double], ListMap[String, Double]) =
+      if (trace) Layers.complete(out.layers, declared) else (ListMap.empty, ListMap.empty)
 
     val results = ListMap(
       "workload" -> name, "seed" -> seed, "seconds" -> seconds,
       "trace" -> trace, "local" -> s"local[$cores]", "session_s" -> sessionS,
-      "correct" -> correct, "attempted" -> out.ops.attempted,
+      "workload_s" -> ((System.nanoTime() - t0) / 1e9 - sessionS),
+      "correct" -> checks.forall(_.ok), "attempted" -> out.ops.attempted,
       "failed" -> out.ops.failed,
       "error_rate" -> out.ops.failed.toDouble / math.max(1L, out.ops.attempted),
-      "end_to_end" -> e2e, "named" -> out.named,
-      "per_layer" -> (if (trace) Layers.complete(out.layers) else ListMap.empty),
+      "end_to_end" -> out.e2e,
+      "per_layer" -> perLayer,
+      "per_layer_more" -> perLayerMore,
       "operations" -> out.ops.summary,
       "failures" -> out.ops.failureLog,
-      "checks" -> out.checks.map(c => ListMap("name" -> c.name, "ok" -> c.ok, "info" -> c.info)),
+      "checks" -> checks.map(c => ListMap("name" -> c.name, "ok" -> c.ok, "info" -> c.info)),
       "spans" -> tracer.map(_.spanTable).getOrElse(ListMap.empty),
       "detail" -> out.detail)
-    Files.write(new File(opt("out")).toPath,
-      Json(results).getBytes(StandardCharsets.UTF_8))
+    json.writerWithDefaultPrettyPrinter().writeValue(new File(opt("out")), results)
 
-    out.checks.filterNot(_.ok).foreach(c => System.err.println(s"CHECK FAILED ${c.name}: ${c.info}"))
+    checks.filterNot(_.ok).foreach(c => System.err.println(s"CHECK FAILED ${c.name}: ${c.info}"))
     out.ops.failureLog.take(5).foreach(f => System.err.println(s"FAILED $f"))
     spark.stop()
   }

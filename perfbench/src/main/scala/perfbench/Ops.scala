@@ -45,13 +45,14 @@ final class Ops {
   def p50(kind: String): Double = Stats.median(values(kind))
   def failureLog: Seq[String] = failures.toSeq
 
-  /** Per kind: sample count, median, and the highest standard percentile
-    * with at least ten samples beyond it. */
+  /** Per kind: sample count, median, the highest standard percentile
+    * with at least ten samples beyond it, and every sample. */
   def summary: ListMap[String, Any] = ListMap(samples.toSeq.map { case (k, xs) =>
     val tail = Stats.tail(xs.toSeq)
     k -> ListMap("n" -> xs.size, "p50_s" -> Stats.median(xs.toSeq),
       "cpu_p50_s" -> Stats.median(cpuValues(k)),
-      "tail_pct" -> tail.map(_._1), "tail_s" -> tail.map(_._2))
+      "tail_pct" -> tail.map(_._1), "tail_s" -> tail.map(_._2),
+      "samples_s" -> xs.toSeq)
   }: _*)
 }
 

@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Everything a workload run gets from the command line and the session. */
 final case class Ctx(spark: SparkSession, seed: Long, seconds: Int,
-                     tracer: Option[Tracer], work: File, cores: Int) {
+                     tracer: Option[Tracer], work: File, cores: Int,
+                     record: Option[String]) {
   /** A fresh directory under the run's work directory. */
   def dir(name: String): String = {
     val d = new File(work, name)
@@ -25,12 +26,10 @@ final case class Ctx(spark: SparkSession, seed: Long, seconds: Int,
 final case class Check(name: String, ok: Boolean, info: String)
 
 /** What a workload run reports: output checks, operation accounting, the
-  * end-to-end metrics (contract names), the same numbers under the
-  * workload's own names, per-layer metrics for a traced run, and detail
-  * for the results file. */
+  * end-to-end metrics, per-layer metrics for a traced run, and detail for
+  * the results file. */
 final case class Outcome(checks: Seq[Check], ops: Ops,
                          e2e: ListMap[String, Double],
-                         named: ListMap[String, Double],
                          layers: Map[String, Double],
                          detail: ListMap[String, Any])
 
@@ -42,7 +41,11 @@ object Workload {
   val all: ListMap[String, Workload] = ListMap(
     "sql_dml" -> SqlDml,
     "cdc_stream" -> CdcStreamApply,
-    "corpus_prep" -> CorpusPrep)
+    "query_sweep" -> QuerySweep)
+
+  /** Rounds every run measures however slow the host: a round takes
+    * seconds here, and a median of one is no median. */
+  val MinRounds = 2
 
   /** Runs `setup` `n` times and returns the last result with the median
     * time; every repetition must produce the same input hash. */
@@ -59,12 +62,12 @@ object Workload {
   }
 
   /** Closed loop: starts `round(i)` one after another until `seconds` have
-    * passed, and lets the round in flight finish. Returns the number of
-    * rounds run. */
+    * passed and at least [[MinRounds]] rounds have run, and lets the round
+    * in flight finish. Returns the number of rounds run. */
   def loop(seconds: Int)(round: Int => Unit): Int = {
     val end = System.nanoTime() + seconds * 1000000000L
     var i = 0
-    while (i == 0 || System.nanoTime() < end) {
+    while (i < MinRounds || System.nanoTime() < end) {
       round(i)
       i += 1
     }
