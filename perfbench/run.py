@@ -3,7 +3,7 @@
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload sql_dml --seed 1 --seconds 8 --trace 0
+    python3 perfbench/run.py --workload sql_dml --seed 1 --seconds 13 --trace 0
     python3 perfbench/run.py --workload all            # every workload in turn
     python3 perfbench/run.py --workload query_sweep --record-sweep-reference
 
@@ -16,7 +16,7 @@ the metrics BENCHMARK.json names: end-to-end metrics with --trace 0,
 per-layer metrics with --trace 1. Exits non-zero when a check fails or
 nothing can be built.
 
-Workloads: sql_dml, cdc_stream and query_sweep. perfbench/layers.json says
+Workloads: sql_dml and query_sweep. perfbench/layers.json says
 what every metric means and which end-to-end metric each per-layer metric
 should move; perfbench/baseline.json holds the numbers measured when the
 benchmark was added. --record-sweep-reference rewrites the query_sweep
@@ -36,7 +36,7 @@ import time
 BENCH = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(BENCH)
 BUILD = os.path.join(ROOT, ".bench_build")
-WORKLOADS = ["sql_dml", "cdc_stream", "query_sweep"]
+WORKLOADS = ["sql_dml", "query_sweep"]
 BUILD_TIMEOUT_S = 840
 RUN_TIMEOUT_S = 170
 HEAP = "3g"
@@ -119,11 +119,16 @@ def build():
 
 
 def run_proc(cmd, cwd, env, timeout):
-    """Runs cmd in its own process group; kills the group on timeout and
-    waits for it. Returns (code, combined output) or None on timeout."""
+    """Runs cmd in its own process group; kills the group on timeout, or
+    when this script is interrupted or terminated, and waits for it.
+    Returns (code, combined output) or None on timeout."""
     proc = subprocess.Popen(cmd, cwd=cwd, env=env, stdout=subprocess.PIPE,
                             stderr=subprocess.STDOUT, text=True,
                             start_new_session=True)
+
+    def stop(signum, _frame):
+        raise KeyboardInterrupt(signum)
+    old = signal.signal(signal.SIGTERM, stop)
     try:
         out, _ = proc.communicate(timeout=timeout)
         return proc.returncode, out
@@ -131,6 +136,12 @@ def run_proc(cmd, cwd, env, timeout):
         os.killpg(proc.pid, signal.SIGKILL)
         proc.communicate()
         return None
+    except KeyboardInterrupt:
+        os.killpg(proc.pid, signal.SIGKILL)
+        proc.communicate()
+        fail("interrupted", 130)
+    finally:
+        signal.signal(signal.SIGTERM, old)
 
 
 def cpu_ticks():
@@ -254,7 +265,7 @@ def main():
     ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     ap.add_argument("--workload", required=True, choices=WORKLOADS + ["all"])
     ap.add_argument("--seed", type=int, default=1)
-    ap.add_argument("--seconds", type=int, default=15)
+    ap.add_argument("--seconds", type=int, default=13)
     ap.add_argument("--trace", type=int, choices=[0, 1], default=0)
     ap.add_argument("--record-sweep-reference", action="store_true",
                     help="rewrite perfbench/sweep_reference.json from this "

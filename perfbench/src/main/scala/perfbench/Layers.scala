@@ -3,8 +3,8 @@ package perfbench
 import scala.collection.immutable.ListMap
 
 /** Per-layer metrics of a traced run. Spark and driver figures are per
-  * round of the workload's loop (a DML round, a CDC batch, a corpus pass,
-  * a sweep pass). */
+  * round of the workload's loop (a DML round with its change file, a sweep
+  * pass). */
 object Layers {
 
   /** Spark-execution, planning and driver-gap metrics from the traced

@@ -1,6 +1,7 @@
 package perfbench
 
 import java.io.File
+import java.lang.management.ManagementFactory
 
 import scala.collection.immutable.ListMap
 import scala.jdk.CollectionConverters._
@@ -42,6 +43,7 @@ object Main {
     work.mkdirs()
     val declared = declaredLayers()
 
+    val t0Ms = System.currentTimeMillis()
     val t0 = System.nanoTime()
     val spark = GraftSession.builder(cores).master(s"local[$cores]")
       .appName(s"perfbench-$name")
@@ -53,8 +55,9 @@ object Main {
     val sessionS = (System.nanoTime() - t0) / 1e9
 
     val tracer = if (trace) Some(new Tracer(spark)) else None
-    val out = try wl.run(Ctx(spark, seed, seconds, tracer, work, cores, opt.get("record")))
-    finally tracer.foreach(_.close())
+    val ctx = Ctx(spark, seed, seconds, tracer, work, cores, opt.get("record"))
+    val out = try wl.run(ctx) finally tracer.foreach(_.close())
+    ctx.phase("checks")
     val checks = out.checks :+ Check("no_failed_operations", out.ops.failed == 0,
       s"${out.ops.failed} of ${out.ops.attempted} operations failed")
     val (perLayer, perLayerMore): (ListMap[String, Double], ListMap[String, Double]) =
@@ -62,7 +65,9 @@ object Main {
 
     val results = ListMap(
       "workload" -> name, "seed" -> seed, "seconds" -> seconds,
-      "trace" -> trace, "local" -> s"local[$cores]", "session_s" -> sessionS,
+      "trace" -> trace, "local" -> s"local[$cores]",
+      "jvm_start_s" -> (t0Ms - ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3,
+      "session_s" -> sessionS, "phases_s" -> ctx.phases,
       "workload_s" -> ((System.nanoTime() - t0) / 1e9 - sessionS),
       "correct" -> checks.forall(_.ok), "attempted" -> out.ops.attempted,
       "failed" -> out.ops.failed,

@@ -11,10 +11,14 @@ import scala.collection.immutable.ListMap
   * percentile. */
 final class Ops {
   private val samples = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
+  private val sampleRounds = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Int]]
   private val cpu = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
   private val failures = mutable.ArrayBuffer.empty[String]
   var attempted = 0L
   var failed = 0L
+  /** The measured round operations now belong to; -1 outside the measured
+    * loop (set-up, warm-up). */
+  var round = -1
 
   /** Runs `body` as one operation of kind `kind`; returns its result, or
     * None when it threw. */
@@ -36,13 +40,17 @@ final class Ops {
     }
   }
 
-  private def add(kind: String, s: Double): Unit =
+  private def add(kind: String, s: Double): Unit = {
     samples.getOrElseUpdate(kind, mutable.ArrayBuffer.empty) += s
+    sampleRounds.getOrElseUpdate(kind, mutable.ArrayBuffer.empty) += round
+  }
 
   def values(kind: String): Seq[Double] = samples.getOrElse(kind, Nil).toSeq
+  /** The samples of kind `kind` taken in the measured rounds `rounds`. */
+  def measured(kind: String, rounds: Set[Int]): Seq[Double] =
+    values(kind).zip(sampleRounds.getOrElse(kind, Nil)).collect { case (s, r) if rounds(r) => s }
   /** CPU seconds the whole process spent during each successful operation. */
   def cpuValues(kind: String): Seq[Double] = cpu.getOrElse(kind, Nil).toSeq
-  def p50(kind: String): Double = Stats.median(values(kind))
   def failureLog: Seq[String] = failures.toSeq
 
   /** Per kind: sample count, median, the highest standard percentile

@@ -17,12 +17,14 @@ import graft.ops.relational._
 
 /** query_sweep: passes over a fixed sample of the keys in the query maps
   * of `graft.ops.relational`, `graft.ops.llm` and `graft.functions`, on
-  * the small [[Fixtures]] tables, in an order the seed sets. Many distinct
+  * the small [[Fixtures]] tables, each pass in its own order drawn from the
+  * seed (so a run's per-key times average over orders). Many distinct
   * short plans stress Catalyst, codegen and the fixed cost per Spark job;
   * the LLM keys run the near-duplicate, DedupCluster and text-function
   * operators. Each key's result must hash to the reference in
-  * perfbench/sweep_reference.json. Point reads and aggregates over the
-  * tables through `graft.Tables` follow the sweep. A traced run also times
+  * perfbench/sweep_reference.json. After each key comes a point read or
+  * (every other key) a full aggregate over the tables through
+  * `graft.Tables`, so reads spread over the whole run. A traced run also times
   * the public `graft.ops.llm` stage calls and `CorpusPipeline` once. */
 object QuerySweep extends Workload {
   type Query = (SparkSession, String) => DataFrame
@@ -48,8 +50,13 @@ object QuerySweep extends Workload {
     "q_agg_basic", "q_join_asof", "q_window_ranking", "q_graph_degree_hist",
     "q_topk_global", "q_llm_minhash", "q_udf_scalar")
   val ReferenceFile = "perfbench/sweep_reference.json"
-  val PointReads = 10
-  val Scans = 6
+  /** Passes before the measured ones, as warm-up: codegen'd plans take
+    * several passes to reach compiled speed. Counted as attempted, not
+    * sampled. */
+  val WarmPasses = 3
+  /** Seconds one pass with its reads takes on a 4-core host: sizes the
+    * measured loop. */
+  val PassS = 3.0
 
   /** Reference hashes by key, from [[ReferenceFile]] under the checkout. */
   def reference(): Map[String, String] = {
@@ -106,20 +113,42 @@ object QuerySweep extends Workload {
       ((d, ts), hash)
     }
     checks += genCheck
+    ctx.phase("setup")
     if (ctx.record.nonEmpty) return record(ctx, dir, ctx.record.get, checks.toSeq, setupS)
 
     val ref = reference()
-    val keys = shuffled(sample, ctx.seed)
+    val keys = sample
+    def order(i: Int): Seq[(String, String)] = shuffled(keys, ctx.seed * 1000003L + i)
     val noRef = keys.map(_._2).filterNot(ref.contains)
     checks += Check("reference_present", noRef.isEmpty,
       s"keys without a hash in $ReferenceFile: ${noRef.mkString(",")}")
     val mismatched = mutable.LinkedHashSet.empty[String]
-    val keyTimes = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[Double]]
+    // per measured pass i: seconds by key, result rows
+    val keyTimes = mutable.LinkedHashMap.empty[String, mutable.ArrayBuffer[(Int, Double)]]
+    val passRows = mutable.Map.empty[Int, Long].withDefaultValue(0L)
     val moduleS = mutable.Map.empty[String, Double].withDefaultValue(0.0)
-    var resultRows = 0L
 
-    /** One pass over the sampled keys; returns its query seconds. */
-    def pass(i: Int): Double = keys.map { case (m, k) =>
+    // point reads and aggregates over the tables the queries read
+    val byName = tables.map(t => t._1 -> t._3).toMap
+    val orders = byName("orders")
+    val lines = byName("lineitem")
+    val wantAgg = (lines.size.toLong, lines.map(_.getDouble(4)).sum)
+    val rr = new java.util.SplittableRandom(ctx.seed + 41)
+    var readMismatch = 0
+    def pointRead(): Unit = {
+      val want = orders(rr.nextInt(orders.size))
+      ops.timed("point_read")(Tables.table(spark, dir, "orders")
+        .filter(col("o_orderkey") === want.getLong(0)).collect())
+        .foreach(rows => if (rows.map(render).toSeq != Seq(render(want))) readMismatch += 1)
+    }
+    def scan(): Unit =
+      ops.timed("scan")(Tables.table(spark, dir, "lineitem")
+        .agg(count(lit(1)), sum(col("l_quantity"))).collect())
+        .foreach(rows => if ((rows(0).getLong(0), rows(0).getDouble(1)) != wantAgg) readMismatch += 1)
+
+    /** One pass over the sampled keys, each followed by a point read or an
+      * aggregate; returns the pass's query seconds. */
+    def pass(i: Int): Double = order(i).zipWithIndex.map { case ((m, k), j) =>
       val t0 = System.nanoTime()
       def body(): (Seq[String], Array[Row]) = {
         val df = modules(m)(k)(spark, dir)
@@ -132,53 +161,41 @@ object QuerySweep extends Workload {
       val s = (System.nanoTime() - t0) / 1e9
       res.foreach { case (cols, rows) =>
         if (!ref.get(k).contains(resultHash(cols, rows))) mismatched += k
-        if (i >= 0) resultRows += rows.length
+        if (i >= 0) passRows(i) += rows.length
       }
       if (i >= 0) {
-        keyTimes.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += s
+        keyTimes.getOrElseUpdate(k, mutable.ArrayBuffer.empty) += (i -> s)
         moduleS(m) += s
       }
+      if (j % 2 == 0) pointRead() else scan()
       s
     }.sum
 
-    pass(-1) // warm-up pass: counted as attempted, not as a latency sample
-    val skip = ops.values("query").size
+    (1 to WarmPasses).foreach(i => pass(-i))
+    ctx.phase("warm_up")
     tr.foreach(_.opTraces.clear())
     val passTimes = mutable.ArrayBuffer.empty[Double]
-    val passes = Workload.loop(ctx.seconds)(i => passTimes += pass(i))
+    val lp = Workload.loop(ctx.seconds, PassS, ops)(i => passTimes += pass(i))
+    val passes = lp.rounds
+    ctx.phase("measure")
     val liveHeapMb = LiveHeap.mb()
     checks += Check("results_match_reference", mismatched.isEmpty,
       s"${mismatched.size} of ${keys.size} keys differ: ${mismatched.mkString(",")}")
-
-    // point reads and aggregates over the tables the queries read
-    val byName = tables.map(t => t._1 -> t._3).toMap
-    val orders = byName("orders")
-    val rr = new java.util.SplittableRandom(ctx.seed + 41)
-    var readMismatch = 0
-    (0 until PointReads).foreach { _ =>
-      val want = orders(rr.nextInt(orders.size))
-      ops.timed("point_read")(Tables.table(spark, dir, "orders")
-        .filter(col("o_orderkey") === want.getLong(0)).collect())
-        .foreach(rows => if (rows.map(render).toSeq != Seq(render(want))) readMismatch += 1)
-    }
-    val lines = byName("lineitem")
-    val wantAgg = (lines.size.toLong, lines.map(_.getDouble(4)).sum)
-    (0 until Scans).foreach { _ =>
-      ops.timed("scan")(Tables.table(spark, dir, "lineitem")
-        .agg(count(lit(1)), sum(col("l_quantity"))).collect())
-        .foreach(rows => if ((rows(0).getLong(0), rows(0).getDouble(1)) != wantAgg) readMismatch += 1)
-    }
     checks += Check("reads_match_tables", readMismatch == 0, s"$readMismatch mismatches")
 
-    val queryS = ops.values("query").drop(skip).sum
+    def measured(kind: String): Seq[Double] = ops.measured(kind, lp.quiet)
     val fixtureRows = tables.map(_._3.size.toLong).sum
     val e2e = ListMap(
       "setup_s" -> setupS,
       "live_heap_mb" -> liveHeapMb,
-      "op_p50_s" -> Stats.median(passTimes.toSeq),
-      "read_p50_s" -> ops.p50("point_read"),
-      "scan_p50_s" -> ops.p50("scan"),
-      "rows_per_s" -> resultRows / queryS,
+      // a pass at each key's median time: steadier than the median of a
+      // few whole passes
+      "op_p50_s" -> keyTimes.values.map(xs => Stats.median(xs.collect {
+        case (i, s) if lp.quiet(i) => s
+      }.toSeq)).sum,
+      "read_p50_s" -> Stats.median(measured("point_read")),
+      "scan_p50_s" -> Stats.median(measured("scan")),
+      "rows_per_s" -> lp.quiet.toSeq.map(passRows).sum / measured("query").sum,
       "bytes_per_row" -> Workload.files(dir).values.sum.toDouble / fixtureRows)
 
     val layers: Map[String, Double] = tr.map { t =>
@@ -188,9 +205,10 @@ object QuerySweep extends Workload {
     }.getOrElse(Map.empty)
 
     Outcome(checks.toSeq, ops, e2e, layers,
-      ListMap("passes" -> passes, "pass_s" -> passTimes.toSeq, "keys" -> keys.map(_._2),
-        "result_rows_per_pass" -> resultRows / math.max(1, passes),
-        "key_p50_s" -> ListMap(keyTimes.toSeq.map { case (k, xs) => k -> Stats.median(xs.toSeq) }: _*)))
+      ListMap("passes" -> passes, "quiet_passes" -> lp.quiet.toSeq.sorted,
+        "pass_steal_share" -> lp.steal, "pass_s" -> passTimes.toSeq, "first_order" -> order(0).map(_._2),
+        "result_rows_per_pass" -> passRows.values.sum / math.max(1, passes),
+        "key_p50_s" -> ListMap(keyTimes.toSeq.map { case (k, xs) => k -> Stats.median(xs.map(_._2).toSeq) }: _*)))
   }
 
   /** Times the public `graft.ops.llm` stage calls once over the fixture

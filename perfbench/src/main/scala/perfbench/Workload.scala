@@ -6,6 +6,7 @@ import java.nio.file.{Files, Path}
 import java.security.MessageDigest
 
 import scala.collection.immutable.ListMap
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
@@ -21,6 +22,18 @@ final case class Ctx(spark: SparkSession, seed: Long, seconds: Int,
     d.getParentFile.mkdirs()
     d.getAbsolutePath
   }
+
+  private val marks = mutable.LinkedHashMap.empty[String, Double]
+  private var last = System.nanoTime()
+
+  /** Adds the seconds since the previous call (or since the context was
+    * made) to phase `name`: where a run's wall time goes. */
+  def phase(name: String): Unit = {
+    val now = System.nanoTime()
+    marks(name) = marks.getOrElse(name, 0.0) + (now - last) / 1e9
+    last = now
+  }
+  def phases: ListMap[String, Double] = ListMap(marks.toSeq: _*)
 }
 
 final case class Check(name: String, ok: Boolean, info: String)
@@ -40,7 +53,6 @@ trait Workload {
 object Workload {
   val all: ListMap[String, Workload] = ListMap(
     "sql_dml" -> SqlDml,
-    "cdc_stream" -> CdcStreamApply,
     "query_sweep" -> QuerySweep)
 
   /** Rounds every run measures however slow the host: a round takes
@@ -61,18 +73,53 @@ object Workload {
         s"input sha256 ${hashes.mkString(",")} over $n generations"))
   }
 
-  /** Closed loop: starts `round(i)` one after another until `seconds` have
-    * passed and at least [[MinRounds]] rounds have run, and lets the round
-    * in flight finish. Returns the number of rounds run. */
-  def loop(seconds: Int)(round: Int => Unit): Int = {
-    val end = System.nanoTime() + seconds * 1000000000L
+  /** A round whose share of CPU time taken by the hypervisor (steal) is
+    * above this measured the host, not the program: it is run again. A
+    * quiet host steals well under 1%. */
+  val MaxSteal = 0.05
+
+  /** What the measured loop ran: the rounds whose samples the metrics use
+    * (`quiet`), and each round's steal share. */
+  final case class Loop(rounds: Int, quiet: Set[Int], steal: Seq[Double])
+
+  /** Closed loop over a fixed amount of work: as many rounds as take
+    * `seconds` at `nominalRoundS` each (at least [[MinRounds]]), one after
+    * another, each tagging its samples in `ops`. Every run of a workload
+    * then measures the same rounds, so a slow stretch of the host does not
+    * also shift which rounds (colder or warmer ones) the medians are taken
+    * over. A round with more than [[MaxSteal]] steal is run again, up to
+    * twice the planned rounds and while three times `seconds` have not
+    * passed; when fewer than [[MinRounds]] rounds were quiet, all count. */
+  def loop(seconds: Int, nominalRoundS: Double, ops: Ops)(round: Int => Unit): Loop = {
+    val n = math.max(MinRounds, math.round(seconds / nominalRoundS).toInt)
+    val end = System.nanoTime() + 3L * seconds * 1000000000L
+    val steal = mutable.ArrayBuffer.empty[Double]
     var i = 0
-    while (i < MinRounds || System.nanoTime() < end) {
+    while (steal.count(_ <= MaxSteal) < n && i < 2 * n &&
+      (i < MinRounds || System.nanoTime() < end)) {
+      ops.round = i
+      val t0 = cpuTicks()
       round(i)
+      steal += stealShare(t0, cpuTicks())
       i += 1
     }
-    i
+    ops.round = -1
+    val quiet = steal.indices.filter(steal(_) <= MaxSteal).toSet
+    Loop(i, if (quiet.size >= MinRounds) quiet else (0 until i).toSet, steal.toSeq)
   }
+
+  /** The aggregate CPU counters of /proc/stat (user, nice, system, idle,
+    * iowait, irq, softirq, steal); empty where there is no /proc/stat. */
+  def cpuTicks(): Seq[Long] =
+    try Files.readAllLines(Path.of("/proc/stat")).get(0).trim.split("\\s+").slice(1, 9).map(_.toLong).toSeq
+    catch { case _: Exception => Nil }
+
+  def stealShare(a: Seq[Long], b: Seq[Long]): Double =
+    if (a.size < 8 || b.size < 8) 0.0
+    else {
+      val d = a.zip(b).map { case (x, y) => y - x }
+      d(7).toDouble / math.max(1L, d.sum)
+    }
 
   def sha256(lines: Iterator[String]): String = {
     val md = MessageDigest.getInstance("SHA-256")
