@@ -53,18 +53,34 @@ object ConfScope {
     * guide §2.6: actions are only sequential because driver code calls
     * them sequentially; two independent checkpoint materializations
     * over tiny frames each underfill the local cluster, so overlapping
-    * them back-fills the idle cores. Errors propagate from either arm
-    * (the other is awaited first so no job leaks past the call). */
-  def par2[A, B](a: => A, b: => B): (A, B) = {
-    val fb = java.util.concurrent.CompletableFuture.supplyAsync(() => b)
-    val ra =
-      try a
-      catch {
-        case t: Throwable =>
-          try fb.join()
-          catch { case _: Throwable => () }
-          throw t
-      }
-    (ra, fb.join())
+    * them back-fills the idle cores. Arm `b` runs on a dedicated
+    * short-lived thread that carries a COPY of the caller's Spark local
+    * properties (job group, scheduler pool, execution id) and active
+    * session, taken at this call — never a pooled thread's stale
+    * inherited ones. Errors propagate from either arm as the original
+    * throwable (the other arm is awaited first so no job leaks past
+    * the call). */
+  def par2[A, B](spark: SparkSession)(a: => A, b: => B): (A, B) = {
+    val exec = java.util.concurrent.Executors.newSingleThreadExecutor()
+    try {
+      val fb = org.apache.spark.sql.execution.SQLExecution
+        .withThreadLocalCaptured(
+          spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], exec)(b)
+      def joinB(): B =
+        try fb.join()
+        catch {
+          case e: java.util.concurrent.CompletionException
+            if e.getCause != null => throw e.getCause
+        }
+      val ra =
+        try a
+        catch {
+          case t: Throwable =>
+            try joinB()
+            catch { case _: Throwable => () }
+            throw t
+        }
+      (ra, joinB())
+    } finally exec.shutdown()
   }
 }

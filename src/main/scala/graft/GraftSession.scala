@@ -8,6 +8,11 @@ import org.apache.spark.sql.SparkSession
   * - AQE on (runtime coalescing, skew-join splitting, SMJ→broadcast)
   * - shuffle partitions sized to the machine, not the 200 default
   * - UTC session timezone (oracle/corpus contract)
+  * - parquet timestamps written as TIMESTAMP_MICROS, not Spark's INT96
+  *   default: Parquet defines no order for INT96, so its footers carry
+  *   no min/max, and graft tables read their write-time column stats
+  *   off the footers of the files each write stages — an INT96
+  *   timestamp column would record no range and never prune
   * - native function registration (graft_dot, graft_normalize_text,
   *   graft_char_shingles)
   *
@@ -30,6 +35,7 @@ object GraftSession {
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
       // functions AND the MERGE-statement parser (r15) at session
       // build — spark.sql("MERGE INTO <graft table> …") just works

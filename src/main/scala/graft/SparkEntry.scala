@@ -13,7 +13,7 @@ import graft.ops.relational._
   */
 object SparkEntry {
 
-  private val modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
+  private[graft] val modules: Seq[(Map[String, (SparkSession, String) => DataFrame], Map[String, String])] =
     Seq(
       (Scans.queries, Scans.oracle),
       (Basics.queries, Basics.oracle),
@@ -69,10 +69,21 @@ object SparkEntry {
 
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _)
+    disjointUnion(modules.map(_._1), "query")
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    modules.map(_._2).reduce(_ ++ _)
+    disjointUnion(modules.map(_._2), "oracle")
+
+  /** The union of module maps, failing on a key two modules define — a
+    * plain `++` would let the later module silently shadow the earlier. */
+  private[graft] def disjointUnion[V](maps: Seq[Map[String, V]],
+                                      what: String): Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity)
+      .collect { case (k, ks) if ks.size > 1 => k }.toSeq.sorted
+    require(dups.isEmpty, s"$what keys defined by more than one module: " +
+      dups.mkString(", "))
+    maps.foldLeft(Map.empty[String, V])(_ ++ _)
+  }
 }

@@ -11,7 +11,8 @@ import graft.Tables
   * column, a bucket-correlated string tier, and a nullable bonus
   * column with ONE agg scan (no rewrite — the declaration path that
   * scales), a merge then promotes a sparse key slice (forcing the
-  * write-riding re-record on every declared face), and the result
+  * merge-write re-record, off the staged footers, on every declared
+  * face), and the result
   * reads back as three DISJOINT filter-pushed legs — string equality,
   * long range, and IS NULL + string range — whose union DuckDB
   * replays. One hash certifies the statement grammar, the metadata-

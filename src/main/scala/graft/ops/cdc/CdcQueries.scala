@@ -601,7 +601,7 @@ object CdcQueries {
     // diff and seed are independent given the checkpointed states —
     // overlap their materializations (guide §2.6; each underfills the
     // cluster on its own)
-    val (diff, seed) = graft.ConfScope.par2(
+    val (diff, seed) = graft.ConfScope.par2(spark)(
       AggMaintain.diffImages(state1, state2,
         Seq("pk"), Seq("seg", "cents")).localCheckpoint(),
       MinMaxMaintain.fullMinMaxState(state1, Seq("seg"),
@@ -665,7 +665,7 @@ object CdcQueries {
     val state2 = Cdc.apply(base1, log.filter($"lsn" > cut),
       Seq("pk"), "lsn", "op", Seq("seg", "cents")).drop("src")
       .unionByName(planted2).localCheckpoint()
-    val (diff, seed) = graft.ConfScope.par2(
+    val (diff, seed) = graft.ConfScope.par2(spark)(
       AggMaintain.diffImages(state1, state2,
         Seq("pk"), Seq("seg", "cents")).localCheckpoint(),
       MinMaxMaintain.fullMinMaxState(state1, Seq("seg"),
@@ -837,10 +837,10 @@ object CdcQueries {
     // windows (the q_cdc_incr_agg composition note). The fact and dim
     // chains are independent — their checkpoint materializations
     // overlap (guide §2.6).
-    val (fact1, dim1) = graft.ConfScope.par2(
+    val (fact1, dim1) = graft.ConfScope.par2(spark)(
       applyF(factSnap, factLog.filter($"lsn" <= cutF)).localCheckpoint(),
       applyD(dimSnap, dimLog.filter($"lsn" <= cutD)).localCheckpoint())
-    val (fact2, dim2) = graft.ConfScope.par2(
+    val (fact2, dim2) = graft.ConfScope.par2(spark)(
       applyF(fact1, factLog.filter($"lsn" > cutF)).localCheckpoint(),
       applyD(dim1, dimLog.filter($"lsn" > cutD)).localCheckpoint())
     val j1 = JoinMaintain.fullJoin(fact1, dim1, "pk", "fk", "dk",
@@ -903,10 +903,10 @@ object CdcQueries {
       Seq("pk"), "lsn", "op", Seq("cents", "fk")).drop("src")
     def applyD(base: DataFrame, log: DataFrame) = Cdc.apply(base, log,
       Seq("dk"), "lsn", "op", Seq("dname")).drop("src")
-    val (fact1, dim1) = graft.ConfScope.par2(
+    val (fact1, dim1) = graft.ConfScope.par2(spark)(
       applyF(factSnap, factLog.filter($"lsn" <= cutF)).localCheckpoint(),
       applyD(dimSnap, dimLog.filter($"lsn" <= cutD)).localCheckpoint())
-    val (fact2, dim2) = graft.ConfScope.par2(
+    val (fact2, dim2) = graft.ConfScope.par2(spark)(
       applyF(fact1, factLog.filter($"lsn" > cutF)).localCheckpoint(),
       applyD(dim1, dimLog.filter($"lsn" > cutD)).localCheckpoint())
     // hop 1: the maintained join (checkpointed — it feeds the hop-2

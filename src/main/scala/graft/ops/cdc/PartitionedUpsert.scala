@@ -1,7 +1,17 @@
 package graft.ops.cdc
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.parquet.column.statistics.Statistics
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.LogicalTypeAnnotation
+import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooterReader
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -123,8 +133,8 @@ object PartitionedUpsert {
   val LayoutRange = "range"
 
   /** Per-bucket data-skipping stats, recorded AT WRITE TIME in the
-    * manifest (the write path lists/aggregates its staged files
-    * anyway) so `stats`, [[readKeyRange]] and [[changesSinceLsn]]
+    * manifest (read off the staged files' footers, [[footerStats]])
+    * so `stats`, [[readKeyRange]] and [[changesSinceLsn]]
     * never have to list or scan buckets to decide what to skip.
     *  - files/bytes: physical footprint (compaction/rebucket signals);
     *  - minKey/maxKey: key range, recorded for INTEGRAL keys only
@@ -285,13 +295,6 @@ object PartitionedUpsert {
       : Option[(String, String)] =
     if (hasUnpairedSurrogate(mn) || hasUnpairedSurrogate(mx)) None
     else strTruncHi(mx).map(hi => (strTruncLo(mn), hi))
-
-  /** The DECLARED string-stats column set of a manifest: whatever any
-    * bucket already records, still string-typed in the live schema. */
-  private def declaredStrCols(m: Manifest): Seq[String] =
-    m.strStats.values.flatMap(_.keys).toSeq.distinct
-      .filter(c => m.schema.fields.exists(f =>
-        f.name.equalsIgnoreCase(c) && isStrStatsType(f.dataType)))
 
   /** CLUSTERING-ONLY long image of a string column for ZORDER rank
     * codes: the first 8 UTF-8 bytes as an unsigned big-endian value,
@@ -887,16 +890,12 @@ object PartitionedUpsert {
       val m0 = Manifest(1L, pinned.schema, nBuckets, keyCol, txns.toMap,
         Map.empty, Map.empty, layout, splits)
       val staging = newStagingName(fs, dir)
-      pinned
-        .withColumn("bucket", routeExpr(m0, col(keyCol)))
-        .write.mode("errorifexists").partitionBy("bucket")
-        .parquet(s"$dir/data/$staging")
-      val written = listBuckets(fs, s"$dir/data/$staging")
+      stageWriter(pinned.withColumn("bucket", routeExpr(m0, col(keyCol))))
+        .partitionBy("bucket").parquet(s"$dir/data/$staging")
       // maxLsn = MinValue: untouched-since-init, skippable for any since
-      val st = stagedStats(spark, fs, dir, staging, written, keyCol,
-        pinned.schema(keyCol).dataType, _ => Some(Long.MinValue))
-      writeManifest(fs, dir, m0.copy(
-        buckets = written.map(b => b -> dataRel(staging, b)).toMap, stats = st))
+      val st = footerStats(spark, dir, staging, pinned.schema, keyCol,
+        StatCols(), _ => Some(Long.MinValue))
+      writeManifest(fs, dir, m0.copy(buckets = st.rels, stats = st.stats))
     } finally if (layout == LayoutRange) { pinned.unpersist(); () }
   }
 
@@ -927,37 +926,176 @@ object PartitionedUpsert {
     org.apache.spark.sql.types.ByteType, org.apache.spark.sql.types.ShortType,
     org.apache.spark.sql.types.IntegerType, org.apache.spark.sql.types.LongType)
 
-  /** Stats for the buckets a write just staged: physical footprint
-    * from one FS listing per bucket, key ranges (integral keys only)
-    * from one aggregation over the staging dir's KEY COLUMN ONLY —
-    * an extra job per write, but a columnar single-column read of
-    * exactly the buckets the write just rewrote with ALL columns, so
-    * it is a small fraction of the rewrite it rides on. Recorded at
-    * write time so later readers never list or scan to prune.
-    * `maxLsnOf` supplies the per-bucket lsn watermark. */
-  private def stagedStats(spark: SparkSession, fs: FileSystem, dir: String,
-                          staging: String, written: Seq[Long], keyCol: String,
-                          keyType: org.apache.spark.sql.types.DataType,
-                          maxLsnOf: Long => Option[Long]): Map[Long, BucketStat] = {
-    // a merge that empties every touched bucket stages NOTHING — no
-    // files to stat, and reading the empty dir cannot infer a schema
-    if (written.isEmpty) return Map.empty
-    val ranges: Map[Long, (Long, Long)] =
-      if (!integralTypes.contains(keyType)) Map.empty
-      else spark.read.parquet(s"$dir/data/$staging")
-        .groupBy(col("bucket").cast(org.apache.spark.sql.types.LongType).as("b"))
-        .agg(min(col(keyCol).cast(org.apache.spark.sql.types.LongType)).as("mn"),
-          max(col(keyCol).cast(org.apache.spark.sql.types.LongType)).as("mx"))
-        .collect()
-        .flatMap(r => if (r.isNullAt(1)) None
-          else Some(r.getLong(0) -> (r.getLong(1), r.getLong(2))))
-        .toMap
-    written.map { b =>
+  /** Columns a staged rewrite records stats for, one list per face:
+    * exact long images ([[Manifest.colStats]]), truncated string bounds
+    * ([[Manifest.strStats]]) and (nulls, rows) pairs
+    * ([[Manifest.nullStats]]). */
+  private final case class StatCols(long: Seq[String] = Nil,
+                                    str: Seq[String] = Nil,
+                                    nul: Seq[String] = Nil) {
+    def ++(o: StatCols): StatCols = StatCols((long ++ o.long).distinct,
+      (str ++ o.str).distinct, (nul ++ o.nul).distinct)
+  }
+
+  /** A table's DECLARED stat columns: whatever any bucket already
+    * records, still of a type the face covers in the live schema
+    * (null-ness is type-independent). Rewrites re-record these and
+    * never invent new ones. */
+  private def declaredCols(m: Manifest): StatCols = {
+    def live(recorded: Iterable[Map[String, _]],
+             ok: org.apache.spark.sql.types.DataType => Boolean): Seq[String] =
+      recorded.flatMap(_.keys).toSeq.distinct.filter(c => m.schema.fields
+        .exists(f => f.name.equalsIgnoreCase(c) && ok(f.dataType)))
+    StatCols(live(m.colStats.values, isColStatsType),
+      live(m.strStats.values, isStrStatsType), live(m.nullStats.values, _ => true))
+  }
+
+  /** What a staged write produced: bucket → table-relative path, plus
+    * the write-time stats of those buckets, one map per manifest face. */
+  private final case class Staged(rels: Map[Long, String],
+                                  stats: Map[Long, BucketStat],
+                                  colStats: Map[Long, Map[String, (Long, Long)]],
+                                  strStats: Map[Long, Map[String, (String, String)]],
+                                  nullStats: Map[Long, Map[String, (Long, Long)]])
+
+  /** Footer bound length of staged writes. Parquet keeps no truncation
+    * by default and drops a chunk's statistics — null count included —
+    * once a bound passes 4 KB; 256 bytes keeps them and still holds at
+    * least 63 whole code points, so the first [[StrStatMaxLen]] code
+    * points of a truncated bound are the value's own and
+    * [[strStatEntry]] over footer bounds equals it over the exact
+    * (min, max). */
+  private val FooterStrBytes = 256
+
+  /** The writer of every staged rewrite (footer bounds sized for
+    * [[footerStats]]). */
+  private def stageWriter(df: DataFrame): DataFrameWriter[Row] =
+    df.write.mode("errorifexists")
+      .option("parquet.statistics.truncate.length", FooterStrBytes.toString)
+
+  /** Spark's file-metadata marker of hybrid-calendar (LEGACY-rebased)
+    * dates and timestamps: such values are not their own long image. */
+  private val LegacyDateTimeKey = "org.apache.spark.legacyDateTime"
+
+  /** Stats of the buckets a write just staged under `data/<staging>`,
+    * read from the Parquet FOOTERS of the files it produced — the
+    * Iceberg column-metrics design: one listing per bucket and one
+    * footer read per file, no Spark job, no wait, any bucket count.
+    * Per bucket: files/bytes; integral-key min/max; the
+    * [[statLongExpr]] image min/max of `cols.long`; [[strStatEntry]]
+    * bounds of `cols.str`; (nulls, rows) of `cols.nul`. A (bucket,
+    * column) whose chunks the footer cannot describe gets NO entry —
+    * absence is the reader's conservative keep: INT96 timestamps
+    * (Parquet defines no order for them; graft sessions write
+    * TIMESTAMP_MICROS), dates/timestamps of a file carrying
+    * [[LegacyDateTimeKey]], and nested columns (a leaf's nulls are not
+    * the column's). An all-NULL column gets no range; an empty bucket
+    * no null pair. `schema` is the staged data's; `maxLsnOf` supplies
+    * the per-bucket lsn watermark. */
+  private def footerStats(spark: SparkSession, dir: String, staging: String,
+                          schema: StructType, keyCol: String, cols: StatCols,
+                          maxLsnOf: Long => Option[Long]): Staged = {
+    val fs = fsOf(spark, dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    def field(c: String) = schema.fields.find(_.name.equalsIgnoreCase(c))
+    val per = listBuckets(fs, s"$dir/data/$staging").map { b =>
       val files = fs.listStatus(new Path(s"$dir/${dataRel(staging, b)}"))
-        .filter(_.getPath.getName.endsWith(".parquet"))
-      b -> BucketStat(files.length, files.map(_.getLen).sum,
-        ranges.get(b).map(_._1), ranges.get(b).map(_._2), maxLsnOf(b))
-    }.toMap
+        .filter(_.getPath.getName.endsWith(".parquet")).toSeq
+      val footers = files.map(f => ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(f, conf), ParquetMetadataConverter.NO_FILTER))
+      val rows = footers.flatMap(_.getBlocks.asScala).map(_.getRowCount).sum
+      // every row group's chunk of a top-level column (None: some row
+      // group has no single-leaf chunk for it), with its file's marker
+      def chunks(name: String): Option[Seq[(ColumnChunkMetaData, Boolean)]] = {
+        val cs = footers.flatMap { f =>
+          val legacy = f.getFileMetaData.getKeyValueMetaData
+            .containsKey(LegacyDateTimeKey)
+          f.getBlocks.asScala.map(_.getColumns.asScala
+            .find(_.getPath.toArray.sameElements(Array(name))).map(_ -> legacy))
+        }
+        if (cs.forall(_.isDefined)) Some(cs.flatten) else None
+      }
+      def bounds[A](name: String, cmp: (A, A) => Int)
+                   (dec: (ColumnChunkMetaData, Boolean) => Option[(A, A)])
+          : Option[(A, A)] = chunks(name).flatMap { cs =>
+        val parts = cs.map { case (ch, legacy) =>
+          val s: Statistics[_] = ch.getStatistics
+          if (s != null && s.hasNonNullValue) dec(ch, legacy).map(Some(_))
+          else if (s != null && s.isNumNullsSet &&
+            s.getNumNulls == ch.getValueCount) Some(None) // all NULL
+          else None
+        }
+        if (parts.exists(_.isEmpty)) None
+        else parts.flatten.flatten.reduceOption { (x, y) =>
+          (if (cmp(x._1, y._1) <= 0) x._1 else y._1,
+            if (cmp(x._2, y._2) >= 0) x._2 else y._2)
+        }
+      }
+      def longs(f: org.apache.spark.sql.types.StructField) =
+        bounds[Long](f.name, java.lang.Long.compare)(footerLongImage(f.dataType, _, _))
+      val keyRange = field(keyCol).filter(f => integralTypes.contains(f.dataType))
+        .flatMap(longs)
+      val cs = cols.long.flatMap(c => field(c).flatMap(longs).map(c -> _))
+      val ss = cols.str.flatMap(c => field(c).flatMap(f =>
+        bounds[String](f.name, strCmp) { (ch, _) =>
+          val s: Statistics[_] = ch.getStatistics
+          (s.genericGetMin, s.genericGetMax) match {
+            case (mn: Binary, mx: Binary) =>
+              Some((mn.toStringUsingUTF8, mx.toStringUsingUTF8))
+            case _ => None
+          }
+        }).flatMap { case (mn, mx) => strStatEntry(mn, mx) }.map(c -> _))
+      val ns = if (rows == 0) Nil else cols.nul.flatMap(c => field(c)
+        .flatMap(f => chunks(f.name)).flatMap { chs =>
+          val n = chs.map { case (ch, _) =>
+            Option(ch.getStatistics).filter(_.isNumNullsSet).map(_.getNumNulls) }
+          if (n.exists(_.isEmpty)) None else Some(c -> ((n.flatten.sum, rows)))
+        })
+      (b, BucketStat(files.length, files.map(_.getLen).sum,
+        keyRange.map(_._1), keyRange.map(_._2), maxLsnOf(b)),
+        cs.toMap, ss.toMap, ns.toMap)
+    }
+    def nonEmpty[A](m: Seq[(Long, Map[String, A])]) = m.toMap.filter(_._2.nonEmpty)
+    Staged(per.map(p => p._1 -> dataRel(staging, p._1)).toMap,
+      per.map(p => p._1 -> p._2).toMap, nonEmpty(per.map(p => p._1 -> p._3)),
+      nonEmpty(per.map(p => p._1 -> p._4)), nonEmpty(per.map(p => p._1 -> p._5)))
+  }
+
+  /** One footer chunk's (min, max) as the [[statLongExpr]] image of a
+    * column of type `dt` — None where the chunk's encoding has none
+    * (INT96 or non-micros timestamps, legacy-rebased dates/timestamps).
+    * Decimals (p ≤ 18) decode to their unscaled long from any of
+    * Spark's encodings: INT32, INT64, or two's-complement bytes. */
+  private def footerLongImage(dt: org.apache.spark.sql.types.DataType,
+                              ch: ColumnChunkMetaData,
+                              legacy: Boolean): Option[(Long, Long)] = {
+    import org.apache.spark.sql.types._
+    val s: Statistics[_] = ch.getStatistics
+    def pair(f: Any => Option[Long]): Option[(Long, Long)] =
+      for (mn <- f(s.genericGetMin); mx <- f(s.genericGetMax)) yield (mn, mx)
+    val num: Any => Option[Long] = {
+      case n: java.lang.Integer => Some(n.longValue)
+      case n: java.lang.Long => Some(n.longValue)
+      case _ => None
+    }
+    val t = ch.getPrimitiveType
+    (dt, t.getPrimitiveTypeName) match {
+      case (ByteType | ShortType | IntegerType | LongType, _) => pair(num)
+      case (DateType, PrimitiveTypeName.INT32) if !legacy => pair(num)
+      case (TimestampType, PrimitiveTypeName.INT64) if !legacy =>
+        t.getLogicalTypeAnnotation match {
+          case ts: LogicalTypeAnnotation.TimestampLogicalTypeAnnotation
+            if ts.getUnit == LogicalTypeAnnotation.TimeUnit.MICROS => pair(num)
+          case _ => None
+        }
+      case (_: DecimalType, PrimitiveTypeName.INT32 | PrimitiveTypeName.INT64) =>
+        pair(num)
+      case (_: DecimalType, _) => pair {
+        case v: Binary => Some(new java.math.BigInteger(v.getBytes).longValueExact)
+        case _ => None
+      }
+      case _ => None
+    }
   }
 
   /** Stage a merge: write the post-merge state of every touched bucket
@@ -1158,78 +1296,9 @@ object PartitionedUpsert {
       // re-evaluation is a codegen'd predicate riding the rewrite)
       val next = enforceChecks(merged, prior.checks)
         .withColumn("bucket", routeExpr(prior, col(keyCol)))
-      // WRITE-RIDING stats (r19): per-bucket key ranges and secondary-
-      // column ranges are OBSERVED on the staging write itself as
-      // conditional aggregates (Spark's CollectMetrics — min/max only,
-      // so task retries cannot skew them), making the post-write stats
-      // pass zero extra jobs/scans on the hot merge path (it ran as
-      // its own scan 3× per q_cdc_dml_sql statement lifecycle and once
-      // per streaming-sink trigger). The secondary-column set is the
-      // table's DECLARED one (whatever any bucket already records —
-      // r18 judge #3: re-record at merge-write so a continuously
-      // merged table keeps pruning between OPTIMIZE runs); a table
-      // that never ZORDERed has none and pays nothing. A wide touched
-      // set (>64 buckets) skips the fusion — thousands of conditional
-      // aggregates stress codegen for no win when the rewrite itself
-      // dwarfs one extra columnar scan — and a missed observation
-      // (bounded getOrEmpty poll, never a hang) falls back to the
-      // dedicated stagedStats/stagedColStats scans. Either path
-      // records identical values: the observe node sits atop the
-      // exact frame the writer consumes.
-      val keyType = prior.schema(keyCol).dataType
-      val mergeStatCols = prior.colStats.values.flatMap(_.keys)
-        .toSeq.distinct.filter(c => prior.schema.fields.exists(f =>
-          f.name.equalsIgnoreCase(c) && isColStatsType(f.dataType)))
-      val mergeStrCols = declaredStrCols(prior)
-      val mergeNullCols = declaredNullCols(prior)
-      def statDt(c: String): org.apache.spark.sql.types.DataType =
-        prior.schema.fields.find(_.name.equalsIgnoreCase(c)).get.dataType
-      val wantKey = integralTypes.contains(keyType)
-      val obsAggs: Seq[org.apache.spark.sql.Column] =
-        if (touched.size > 64) Nil
-        else touched.flatMap { b =>
-          val k = when(col("bucket") === lit(b),
-            col(keyCol).cast(org.apache.spark.sql.types.LongType))
-          (if (wantKey) Seq(min(k).as(s"__kmn_$b"), max(k).as(s"__kmx_$b"))
-           else Nil) ++
-            mergeStatCols.zipWithIndex.flatMap { case (c, i) =>
-              val v = when(col("bucket") === lit(b),
-                statLongExpr(col(c), statDt(c)))
-              Seq(min(v).as(s"__c${i}mn_$b"), max(v).as(s"__c${i}mx_$b"))
-            } ++
-            // string bounds ride the same observe: exact (min, max)
-            // per (bucket, column), truncated driver-side below
-            mergeStrCols.zipWithIndex.flatMap { case (c, i) =>
-              val v = when(col("bucket") === lit(b), col(c))
-              Seq(min(v).as(s"__s${i}mn_$b"), max(v).as(s"__s${i}mx_$b"))
-            } ++
-            // null/row counts too — exactly-once under the observe:
-            // the staging write is an ACTION's result stage, where
-            // Spark applies each task's accumulator update once
-            // (failed attempts dropped, duplicate successes ignored
-            // by the scheduler), so counts cannot over-accumulate
-            (if (mergeNullCols.isEmpty) Nil
-             else count(when(col("bucket") === lit(b), 1))
-               .as(s"__nr_$b") +:
-               mergeNullCols.zipWithIndex.map { case (c, i) =>
-                 count(when(col("bucket") === lit(b) && col(c).isNull, 1))
-                   .as(s"__n${i}_$b")
-               })
-        }
-      val obsv = org.apache.spark.sql.Observation()
-      val toWrite =
-        if (obsAggs.isEmpty) next
-        else next.observe(obsv, obsAggs.head, obsAggs.tail: _*)
       // fresh staging dir: the plan reads the old files and writes new
       // ones — no read-write conflict, no checkpoint materialization
-      toWrite.write.mode("errorifexists")
-        .partitionBy("bucket").parquet(s"$dir/data/$staging")
-      val written = listBuckets(fs, s"$dir/data/$staging")
-      // untouched buckets keep their old paths; touched buckets move to
-      // the staging dir; touched-but-absent buckets were emptied by
-      // deletes and vanish by omission — nothing to resurrect
-      val buckets = (prior.buckets -- touched) ++
-        written.map(b => b -> dataRel(staging, b))
+      stageWriter(next).partitionBy("bucket").parquet(s"$dir/data/$staging")
       // lsn watermark: max(prior watermark, this batch's max per
       // bucket). A bucket whose prior manifest had no stats keeps None
       // — its historical lsn ceiling is unknowable, and claiming this
@@ -1256,80 +1325,15 @@ object PartitionedUpsert {
           case _ => None
         }
       }
-      val observed: Map[String, Any] =
-        if (obsAggs.isEmpty) Map.empty
-        else {
-          // the metrics promise completes on the ASYNC listener bus —
-          // normally sub-millisecond after the write returns, but a
-          // backlogged bus (observed mid-sweep under 200+ concurrent
-          // query keys) can lag SECONDS, and the fallback scan costs
-          // about one small job over page-cached files — so waiting
-          // longer than that is a strict loss. Bounded wait on the
-          // observation's own future (no extra thread); on lag the
-          // dedicated scans record identical values by construction.
-          import scala.concurrent.Await
-          import scala.concurrent.duration._
-          scala.util.Try {
-            val row = Await.result(obsv.future, 2.seconds)
-            row.getValuesMap[Any](row.schema.fieldNames.toSeq)
-          }.getOrElse(Map.empty)
-        }
-      def obsLong(nm: String): Option[Long] = observed.get(nm) match {
-        case Some(v: Number) => Some(v.longValue)
-        case _ => None
-      }
-      val st: Map[Long, BucketStat] =
-        if (observed.nonEmpty) written.map { b =>
-          val files = fs.listStatus(new Path(s"$dir/${dataRel(staging, b)}"))
-            .filter(_.getPath.getName.endsWith(".parquet"))
-          b -> BucketStat(files.length, files.map(_.getLen).sum,
-            if (wantKey) obsLong(s"__kmn_$b") else None,
-            if (wantKey) obsLong(s"__kmx_$b") else None,
-            lsnCeil(b))
-        }.toMap
-        else stagedStats(spark, fs, dir, staging, written, keyCol,
-          keyType, lsnCeil)
-      val freshCs: Map[Long, Map[String, (Long, Long)]] =
-        if (observed.nonEmpty)
-          written.map { b =>
-            b -> mergeStatCols.zipWithIndex.flatMap { case (c, i) =>
-              (obsLong(s"__c${i}mn_$b"), obsLong(s"__c${i}mx_$b")) match {
-                case (Some(mn), Some(mx)) => Some(c -> (mn, mx))
-                case _ => None
-              }
-            }.toMap
-          }.toMap.filter(_._2.nonEmpty)
-        else stagedColStats(spark, dir, staging, mergeStatCols,
-          written, prior.schema)
-      def obsStr(nm: String): Option[String] = observed.get(nm) match {
-        case Some(s: String) => Some(s)
-        case Some(u: org.apache.spark.unsafe.types.UTF8String) =>
-          Some(u.toString)
-        case _ => None
-      }
-      val freshSs: Map[Long, Map[String, (String, String)]] =
-        if (observed.nonEmpty)
-          written.map { b =>
-            b -> mergeStrCols.zipWithIndex.flatMap { case (c, i) =>
-              (obsStr(s"__s${i}mn_$b"), obsStr(s"__s${i}mx_$b")) match {
-                case (Some(mn), Some(mx)) => strStatEntry(mn, mx).map(c -> _)
-                case _ => None
-              }
-            }.toMap
-          }.toMap.filter(_._2.nonEmpty)
-        else stagedStrStats(spark, dir, staging, mergeStrCols, written)
-      val freshNs: Map[Long, Map[String, (Long, Long)]] =
-        if (observed.nonEmpty)
-          written.map { b =>
-            obsLong(s"__nr_$b") match {
-              case Some(rows) =>
-                b -> mergeNullCols.zipWithIndex.flatMap { case (c, i) =>
-                  obsLong(s"__n${i}_$b").map(n => c -> (n, rows))
-                }.toMap
-              case None => b -> Map.empty[String, (Long, Long)]
-            }
-          }.toMap.filter(_._2.nonEmpty)
-        else stagedNullStats(spark, dir, staging, mergeNullCols, written)
+      // write-time stats off the staged files' footers: key ranges and
+      // the table's DECLARED secondary columns (whatever any bucket
+      // already records — r18 judge #3: re-record at merge-write so a
+      // continuously merged table keeps pruning between OPTIMIZE
+      // runs). No extra job on the merge path, which is the streaming
+      // sink's per-trigger commit; a table that never declared stats
+      // pays one footer read per staged file.
+      val st = footerStats(spark, dir, staging, prior.schema, keyCol,
+        declaredCols(prior), lsnCeil)
       // manifest version = base+1: a concurrent merge from the same
       // base targets the SAME manifest name and loses the publish race.
       // Touched buckets rewrote from the tombstone-FILTERED read, so
@@ -1337,15 +1341,19 @@ object PartitionedUpsert {
       // rewrite (an untouched bucket keeps its tombs).
       Pending(staging,
         prior.copy(version = prior.version + 1, txns = prior.txns ++ txns,
-          buckets = buckets, stats = (prior.stats -- touched) ++ st,
+          // untouched buckets keep their old paths; touched buckets move
+          // to the staging dir; touched-but-absent buckets were emptied
+          // by deletes and vanish by omission — nothing to resurrect
+          buckets = (prior.buckets -- touched) ++ st.rels,
+          stats = (prior.stats -- touched) ++ st.stats,
           tombs = prior.tombs -- touched,
           // untouched buckets' entries stay valid verbatim; touched
           // buckets carry the FRESH ranges computed off the staged
           // rewrite (an emptied/all-NULL bucket records nothing —
           // absence = conservative keep on the read side)
-          colStats = (prior.colStats -- touched) ++ freshCs,
-          strStats = (prior.strStats -- touched) ++ freshSs,
-          nullStats = (prior.nullStats -- touched) ++ freshNs),
+          colStats = (prior.colStats -- touched) ++ st.colStats,
+          strStats = (prior.strStats -- touched) ++ st.strStats,
+          nullStats = (prior.nullStats -- touched) ++ st.nullStats),
         touched, base = Some(prior))
     } finally { withBucket.unpersist(); () }
   }
@@ -1450,16 +1458,13 @@ object PartitionedUpsert {
       return
     requireSchemaMatch(snapshot.schema, prior.schema, dir)
     val staging = newStagingName(fs, dir)
-    enforceChecks(snapshot, prior.checks)
-      .withColumn("bucket", routeExpr(prior, col(prior.keyCol)))
-      .write.mode("errorifexists")
+    stageWriter(enforceChecks(snapshot, prior.checks)
+      .withColumn("bucket", routeExpr(prior, col(prior.keyCol))))
       .partitionBy("bucket").parquet(s"$dir/data/$staging")
-    val written = listBuckets(fs, s"$dir/data/$staging")
-    val st = stagedStats(spark, fs, dir, staging, written, prior.keyCol,
-      prior.schema(prior.keyCol).dataType, _ => None)
+    val st = footerStats(spark, dir, staging, prior.schema, prior.keyCol,
+      StatCols(), _ => None)
     writeManifest(fs, dir, prior.copy(version = prior.version + 1,
-      txns = prior.txns ++ txn,
-      buckets = written.map(b => b -> dataRel(staging, b)).toMap, stats = st,
+      txns = prior.txns ++ txn, buckets = st.rels, stats = st.stats,
       tombs = Map.empty, // replaced contents carry no delete debt
       colStats = Map.empty, // new contents: old ranges bound nothing
       strStats = Map.empty, nullStats = Map.empty,
@@ -1745,7 +1750,6 @@ object PartitionedUpsert {
       // tombstones/defaults (bucketsDf) — the states both writers
       // actually derived from and produced.
       val staging = newStagingName(fs, dir)
-      val composedEntries = scala.collection.mutable.Map[Long, String]()
       var ok = true
       contested.foreach { b =>
         if (ok) {
@@ -1770,14 +1774,7 @@ object PartitionedUpsert {
             val composed = winnerRows
               .join(ourChanged, Seq(key), "left_anti")
               .unionByName(ourNew)
-            composed.write.mode("errorifexists")
-              .parquet(s"$dir/${dataRel(staging, b)}")
-            // an emptied composed bucket writes a dir with no rows —
-            // parquet still lays down a footer-only file, so presence
-            // is decided by the listing below, not assumed
-            if (fs.listStatus(new Path(s"$dir/${dataRel(staging, b)}"))
-                .exists(_.getPath.getName.endsWith(".parquet")))
-              composedEntries(b) = dataRel(staging, b)
+            stageWriter(composed).parquet(s"$dir/${dataRel(staging, b)}")
           }
         }
       }
@@ -1785,34 +1782,20 @@ object PartitionedUpsert {
         fs.delete(new Path(s"$dir/data/$staging"), true): Unit
         throw first // genuine key overlap — the loud conflict stands
       }
-      // stats for the composed buckets, recomputed off the staged
-      // files (same discipline as every rewrite); lsn ceiling is the
-      // max of both writers' (None if either unknown)
-      val written = listBuckets(fs, s"$dir/data/$staging")
-      val st = stagedStats(spark, fs, dir, staging, written, key,
-        base.schema(key).dataType,
+      // stats for the composed buckets, off the staged footers (same
+      // discipline as every rewrite) for both writers' declared
+      // columns; lsn ceiling is the max of both writers' (None if
+      // either unknown)
+      val st = footerStats(spark, dir, staging, base.schema, key,
+        declaredCols(winner) ++ declaredCols(pending.manifest),
         b => for {
           o <- pending.manifest.stats.get(b).flatMap(_.maxLsn)
           w <- winner.stats.get(b).flatMap(_.maxLsn)
         } yield math.max(o, w))
-      val statCols = (winner.colStats.values ++
-          pending.manifest.colStats.values)
-        .flatMap(_.keys).toSeq.distinct
-        .filter(c => base.schema.fields.exists(f =>
-          f.name.equalsIgnoreCase(c) && isColStatsType(f.dataType)))
-      val freshCs = stagedColStats(spark, dir, staging, statCols,
-        written, base.schema)
-      val strCols = (winner.strStats.values ++
-          pending.manifest.strStats.values)
-        .flatMap(_.keys).toSeq.distinct
-        .filter(c => base.schema.fields.exists(f =>
-          f.name.equalsIgnoreCase(c) && isStrStatsType(f.dataType)))
-      val freshSs = stagedStrStats(spark, dir, staging, strCols, written)
-      val nullCols = (winner.nullStats.values ++
-          pending.manifest.nullStats.values)
-        .flatMap(_.keys).toSeq.distinct
-        .filter(c => base.schema.fields.exists(_.name.equalsIgnoreCase(c)))
-      val freshNs = stagedNullStats(spark, dir, staging, nullCols, written)
+      // an emptied composed bucket writes a dir with no rows — parquet
+      // still lays down a footer-only file, so presence is decided by
+      // the listed files, not assumed
+      val composedEntries = st.rels.filter { case (b, _) => st.stats(b).files > 0 }
       val uncontested = ourTouched -- contested.toSet
       val next = winner.copy(version = winner.version + 1,
         txns = winner.txns ++ ourTxns,
@@ -1821,20 +1804,20 @@ object PartitionedUpsert {
             uncontested(b) } ++ composedEntries,
         stats = (winner.stats -- ourTouched) ++
           pending.manifest.stats.filter { case (b, _) =>
-            uncontested(b) } ++ st,
+            uncontested(b) } ++ st.stats,
         // every contested bucket was rewritten reading BOTH sides'
         // tombstones; uncontested buckets follow the bucket-level
         // rebase rule (our rewrite physicalized base's == winner's)
         tombs = winner.tombs -- ourTouched,
         colStats = (winner.colStats -- ourTouched) ++
           pending.manifest.colStats.filter { case (b, _) =>
-            uncontested(b) } ++ freshCs,
+            uncontested(b) } ++ st.colStats,
         strStats = (winner.strStats -- ourTouched) ++
           pending.manifest.strStats.filter { case (b, _) =>
-            uncontested(b) } ++ freshSs,
+            uncontested(b) } ++ st.strStats,
         nullStats = (winner.nullStats -- ourTouched) ++
           pending.manifest.nullStats.filter { case (b, _) =>
-            uncontested(b) } ++ freshNs)
+            uncontested(b) } ++ st.nullStats)
       try { writeManifest(fs, dir, next); return }
       catch { case _: java.util.ConcurrentModificationException =>
         fs.delete(new Path(s"$dir/data/$staging"), true): Unit }
@@ -1891,6 +1874,14 @@ object PartitionedUpsert {
     * correct backpressure, not spin). */
   private val MaxRebaseAttempts = 5
 
+  /** Per-bucket stats maps merged per (bucket, column): `fresh` wins. */
+  private def mergedStats[A](base: Map[Long, Map[String, A]],
+                             fresh: Map[Long, Map[String, A]])
+      : Map[Long, Map[String, A]] =
+    (base.keySet ++ fresh.keySet).map { b =>
+      b -> (base.getOrElse(b, Map.empty) ++ fresh.getOrElse(b, Map.empty))
+    }.toMap.filter(_._2.nonEmpty)
+
   /** Publish a MAINTENANCE rewrite (compact / zorder / tombstone
     * purge) of `target` buckets, riding the same disjoint auto-rebase
     * as [[commit]] (r17 verdict #4): the rewrite read the base state
@@ -1902,138 +1893,25 @@ object PartitionedUpsert {
     * conflict error (expensive-retry where merge already had the
     * cheap-rebase). A genuine overlap still refuses; maintenance
     * carries no txn cursors so the replay check is vacuous. */
-  /** Per-bucket [min,max] of `statCols` (the [[statLongExpr]] image —
-    * callers gate via [[isColStatsType]]) aggregated over a
-    * freshly-staged rewrite: ONE small agg over just-written,
-    * page-cached files; driver-bounded at nBuckets rows × ≤ a few
-    * columns. An all-NULL column in a bucket records nothing (no
-    * range exists; absence = conservative keep). */
-  private def stagedColStats(spark: SparkSession, dir: String,
-                             staging: String, statCols: Seq[String],
-                             written: Seq[Long], schema: StructType)
-      : Map[Long, Map[String, (Long, Long)]] =
-    if (statCols.isEmpty || written.isEmpty) Map.empty
-    else {
-      def dtOf(c: String): org.apache.spark.sql.types.DataType =
-        schema.fields.find(_.name.equalsIgnoreCase(c)).get.dataType
-      val aggs = statCols.flatMap(c => Seq(
-        min(statLongExpr(col(c), dtOf(c))).as(s"__mn_$c"),
-        max(statLongExpr(col(c), dtOf(c))).as(s"__mx_$c")))
-      // partition-column inference may type bucket= as int — cast
-      spark.read.parquet(s"$dir/data/$staging")
-        .groupBy(col("bucket")
-          .cast(org.apache.spark.sql.types.LongType).as("bucket"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          val b = r.getLong(r.fieldIndex("bucket"))
-          b -> statCols.flatMap { c =>
-            val mn = r.fieldIndex(s"__mn_$c")
-            val mx = r.fieldIndex(s"__mx_$c")
-            if (r.isNullAt(mn) || r.isNullAt(mx)) None
-            else Some(c -> (r.getLong(mn), r.getLong(mx)))
-          }.toMap
-        }.toMap.filter(_._2.nonEmpty)
-    }
-
-  /** Per-bucket truncated string bounds aggregated over a freshly-
-    * staged rewrite — the string face of [[stagedColStats]]: same one
-    * small agg over just-written page-cached files, driver-bounded at
-    * nBuckets rows × ≤ a few columns; truncation happens driver-side
-    * off the exact (min, max) the agg returns. */
-  private def stagedStrStats(spark: SparkSession, dir: String,
-                             staging: String, cols: Seq[String],
-                             written: Seq[Long])
-      : Map[Long, Map[String, (String, String)]] =
-    if (cols.isEmpty || written.isEmpty) Map.empty
-    else {
-      val aggs = cols.flatMap(c => Seq(
-        min(col(c)).as(s"__mn_$c"), max(col(c)).as(s"__mx_$c")))
-      spark.read.parquet(s"$dir/data/$staging")
-        .groupBy(col("bucket")
-          .cast(org.apache.spark.sql.types.LongType).as("bucket"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          val b = r.getLong(r.fieldIndex("bucket"))
-          b -> cols.flatMap { c =>
-            val mn = r.fieldIndex(s"__mn_$c")
-            val mx = r.fieldIndex(s"__mx_$c")
-            if (r.isNullAt(mn) || r.isNullAt(mx)) None
-            else strStatEntry(r.getString(mn), r.getString(mx)).map(c -> _)
-          }.toMap
-        }.toMap.filter(_._2.nonEmpty)
-    }
-
-  /** Per-(bucket, column) (nulls, rows) pairs aggregated over a
-    * freshly-staged rewrite — the null face of [[stagedColStats]]:
-    * unlike min/max it records an entry even for an all-NULL column
-    * (that (n, n) pair is exactly what IsNotNull pruning needs). */
-  private def stagedNullStats(spark: SparkSession, dir: String,
-                              staging: String, cols: Seq[String],
-                              written: Seq[Long])
-      : Map[Long, Map[String, (Long, Long)]] =
-    if (cols.isEmpty || written.isEmpty) Map.empty
-    else {
-      val aggs = count(lit(1)).as("__rows") +:
-        cols.map(c => count(when(col(c).isNull, 1)).as(s"__nn_$c"))
-      spark.read.parquet(s"$dir/data/$staging")
-        .groupBy(col("bucket")
-          .cast(org.apache.spark.sql.types.LongType).as("bucket"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          val b = r.getLong(r.fieldIndex("bucket"))
-          val rows = r.getLong(r.fieldIndex("__rows"))
-          b -> cols.map { c =>
-            c -> (r.getLong(r.fieldIndex(s"__nn_$c")), rows)
-          }.toMap
-        }.toMap.filter(_._2.nonEmpty)
-    }
-
-  /** The DECLARED null-stats column set: whatever any bucket already
-    * records, still present in the live schema (null-ness does not
-    * depend on the column's type or collation, so no type gate). */
-  private def declaredNullCols(m: Manifest): Seq[String] =
-    m.nullStats.values.flatMap(_.keys).toSeq.distinct
-      .filter(c => m.schema.fields.exists(_.name.equalsIgnoreCase(c)))
-
   private def publishMaintenance(spark: SparkSession, dir: String,
                                  prior: Manifest, target: Seq[Long],
-                                 entries: Map[Long, String],
-                                 st: Map[Long, BucketStat],
-                                 freshColStats: Map[Long,
-                                   Map[String, (Long, Long)]] = Map.empty,
-                                 freshStrStats: Map[Long,
-                                   Map[String, (String, String)]] = Map.empty,
-                                 freshNullStats: Map[Long,
-                                   Map[String, (Long, Long)]] = Map.empty)
-      : Unit = {
+                                 staged: Staged): Unit = {
     val fs = fsOf(spark, dir)
     // maintenance rewrites never change VALUES (compact/purge remove
     // tombstoned rows; zorder reorders within buckets), so carried
-    // per-bucket column ranges stay sound over-approximations; zorder
-    // additionally passes fresh, tighter entries for its columns,
-    // which win per (bucket, column)
+    // per-bucket column ranges stay sound over-approximations; fresh
+    // entries off the staged footers win per (bucket, column)
+    // (null counts too: a no-null bucket stays no-null and an all-null
+    // bucket stays all-null under any row removal, so BOTH pruning
+    // tests remain sound on a carried pair)
     def next(head: Manifest): Manifest =
       head.copy(version = head.version + 1,
-        buckets = (head.buckets -- target) ++ entries,
-        stats = (head.stats -- target) ++ st,
+        buckets = (head.buckets -- target) ++ staged.rels,
+        stats = (head.stats -- target) ++ staged.stats,
         tombs = head.tombs -- target,
-        colStats = (head.colStats.keySet ++ freshColStats.keySet).map { b =>
-          b -> (head.colStats.getOrElse(b, Map.empty) ++
-            freshColStats.getOrElse(b, Map.empty))
-        }.toMap.filter(_._2.nonEmpty),
-        strStats = (head.strStats.keySet ++ freshStrStats.keySet).map { b =>
-          b -> (head.strStats.getOrElse(b, Map.empty) ++
-            freshStrStats.getOrElse(b, Map.empty))
-        }.toMap.filter(_._2.nonEmpty),
-        // null counts survive removal-only rewrites: a no-null bucket
-        // stays no-null and an all-null bucket stays all-null under
-        // any row removal, so BOTH pruning tests remain sound on a
-        // carried pair; fresh entries win per (bucket, column)
-        nullStats = (head.nullStats.keySet ++ freshNullStats.keySet)
-          .map { b =>
-            b -> (head.nullStats.getOrElse(b, Map.empty) ++
-              freshNullStats.getOrElse(b, Map.empty))
-          }.toMap.filter(_._2.nonEmpty))
+        colStats = mergedStats(head.colStats, staged.colStats),
+        strStats = mergedStats(head.strStats, staged.strStats),
+        nullStats = mergedStats(head.nullStats, staged.nullStats))
     try writeManifest(fs, dir, next(prior))
     catch {
       case first: java.util.ConcurrentModificationException =>
@@ -2222,20 +2100,16 @@ object PartitionedUpsert {
     val target = prior.tombs.keys.toSeq.filter(prior.buckets.contains).sorted
     if (target.isEmpty) return Seq.empty
     val staging = newStagingName(fs, dir)
-    bucketsDf(spark, dir, prior, only = Some(target))
+    stageWriter(bucketsDf(spark, dir, prior, only = Some(target))
       .withColumn("bucket", routeExpr(prior, col(prior.keyCol)))
-      .repartition(target.size, col("bucket"))
-      .write.mode("errorifexists").partitionBy("bucket")
-      .parquet(s"$dir/data/$staging")
-    val written = listBuckets(fs, s"$dir/data/$staging")
-    val st = stagedStats(spark, fs, dir, staging, written, prior.keyCol,
-      prior.schema(prior.keyCol).dataType,
-      b => prior.stats.get(b).flatMap(_.maxLsn))
+      .repartition(target.size, col("bucket")))
+      .partitionBy("bucket").parquet(s"$dir/data/$staging")
+    val st = footerStats(spark, dir, staging, prior.schema, prior.keyCol,
+      StatCols(), b => prior.stats.get(b).flatMap(_.maxLsn))
     // fully-tombstoned buckets stage nothing and leave the map (the
     // emptied-by-omission rule — nothing to resurrect); published
     // through the maintenance auto-rebase (r17 verdict #4)
-    publishMaintenance(spark, dir, prior, target,
-      written.map(b => b -> dataRel(staging, b)).toMap, st)
+    publishMaintenance(spark, dir, prior, target, st)
     target
   }
 
@@ -2321,19 +2195,15 @@ object PartitionedUpsert {
     }.sorted
     if (target.isEmpty) return Seq.empty
     val staging = newStagingName(fs, dir)
-    bucketsDf(spark, dir, prior, only = Some(target))
+    stageWriter(bucketsDf(spark, dir, prior, only = Some(target))
       .withColumn("bucket", routeExpr(prior, col(prior.keyCol)))
-      .repartition(target.size, col("bucket"))
-      .write.mode("errorifexists").partitionBy("bucket")
-      .parquet(s"$dir/data/$staging")
-    val written = listBuckets(fs, s"$dir/data/$staging")
-    val st = stagedStats(spark, fs, dir, staging, written, prior.keyCol,
-      prior.schema(prior.keyCol).dataType,
-      b => prior.stats.get(b).flatMap(_.maxLsn))
+      .repartition(target.size, col("bucket")))
+      .partitionBy("bucket").parquet(s"$dir/data/$staging")
+    val st = footerStats(spark, dir, staging, prior.schema, prior.keyCol,
+      StatCols(), b => prior.stats.get(b).flatMap(_.maxLsn))
     writeManifest(fs, dir, prior.copy(version = prior.version + 1,
-      buckets = (prior.buckets -- target) ++
-        written.map(b => b -> dataRel(staging, b)),
-      stats = (prior.stats -- target) ++ st,
+      buckets = (prior.buckets -- target) ++ st.rels,
+      stats = (prior.stats -- target) ++ st.stats,
       tombs = prior.tombs -- target))
     target
   }
@@ -2438,11 +2308,9 @@ object PartitionedUpsert {
     // version instead of paying both again on every replay
     if (evolved.schema.json == prior.schema.json) return
     val staging = newStagingName(fs, dir)
-    evolved
-      .withColumn("bucket", routeExpr(prior.copy(keyCol = keyCol), col(keyCol)))
-      .write.mode("errorifexists")
+    stageWriter(evolved
+      .withColumn("bucket", routeExpr(prior.copy(keyCol = keyCol), col(keyCol))))
       .partitionBy("bucket").parquet(s"$dir/data/$staging")
-    val written = listBuckets(fs, s"$dir/data/$staging")
     // ranges are recomputed from the staged files either way; lsn
     // watermarks carry over ONLY while bucket identity survives. Under
     // HASH layout a widen of the KEY column changes xxhash64 routing
@@ -2466,11 +2334,11 @@ object PartitionedUpsert {
           else per.flatten.reduceOption((a: Long, b: Long) => math.max(a, b))
         _ => global
       }
-    val st = stagedStats(spark, fs, dir, staging, written, keyCol,
-      evolved.schema(keyCol).dataType, carriedLsn)
+    val st = footerStats(spark, dir, staging, evolved.schema, keyCol,
+      StatCols(), carriedLsn)
     writeManifest(fs, dir, prior.copy(version = prior.version + 1,
       schema = evolved.schema, keyCol = keyCol,
-      buckets = written.map(b => b -> dataRel(staging, b)).toMap, stats = st,
+      buckets = st.rels, stats = st.stats,
       // the rewrite read through the tombstone filter, so deletes are
       // physical now; stale sidecars would also carry the PRE-rename
       // key column name and must not survive the evolution
@@ -2587,11 +2455,8 @@ object PartitionedUpsert {
       else Cdc.planChunkBounds(current, keyCol, newBuckets).slice(1, newBuckets)
     val next0 = prior.copy(nBuckets = newBuckets, splits = newSplits)
     val staging = newStagingName(fs, dir)
-    current
-      .withColumn("bucket", routeExpr(next0, col(keyCol)))
-      .write.mode("errorifexists")
+    stageWriter(current.withColumn("bucket", routeExpr(next0, col(keyCol))))
       .partitionBy("bucket").parquet(s"$dir/data/$staging")
-    val written = listBuckets(fs, s"$dir/data/$staging")
     // rows rehash across buckets: key ranges recomputed; per-bucket lsn
     // history is gone with the old identity, so every new bucket takes
     // the GLOBAL prior ceiling (conservative-correct: >= its true max)
@@ -2602,10 +2467,10 @@ object PartitionedUpsert {
       if (per.exists(_.isEmpty)) None
       else per.flatten.reduceOption((a: Long, b: Long) => math.max(a, b))
     }
-    val st = stagedStats(spark, fs, dir, staging, written, keyCol,
-      prior.schema(keyCol).dataType, _ => globalLsn)
+    val st = footerStats(spark, dir, staging, prior.schema, keyCol,
+      StatCols(), _ => globalLsn)
     writeManifest(fs, dir, next0.copy(version = prior.version + 1,
-      buckets = written.map(b => b -> dataRel(staging, b)).toMap, stats = st,
+      buckets = st.rels, stats = st.stats,
       tombs = Map.empty, // full rewrite read tombstone-filtered
       colStats = Map.empty, // rows rehashed: old bucket ranges are void
       strStats = Map.empty, nullStats = Map.empty,
@@ -2638,66 +2503,30 @@ object PartitionedUpsert {
     }
     if (fragmented.isEmpty) return Seq.empty
     val staging = newStagingName(fs, dir)
-    bucketsDf(spark, dir, prior, only = Some(fragmented.keys.toSeq.sorted))
+    stageWriter(bucketsDf(spark, dir, prior, only = Some(fragmented.keys.toSeq.sorted))
       .withColumn("bucket", routeExpr(prior, col(prior.keyCol)))
-      .repartition(fragmented.size, col("bucket"))
-      .write.mode("errorifexists")
+      .repartition(fragmented.size, col("bucket")))
       .partitionBy("bucket").parquet(s"$dir/data/$staging")
-    val written = listBuckets(fs, s"$dir/data/$staging")
     // compaction is bit-identical data (modulo tombstones the read
     // applied — a compacted bucket's deletes are physical afterwards,
-    // so its sidecars retire): ranges recomputed from the staged
-    // files, lsn watermarks carried. `prior.copy` — NOT a positional
+    // so its sidecars retire): ranges re-read from the staged footers,
+    // lsn watermarks carried. `prior.copy` — NOT a positional
     // rebuild — so layout/splits survive (a positional Manifest here
-    // silently reset a range table to hash layout).
-    val st = stagedStats(spark, fs, dir, staging, written, prior.keyCol,
-      prior.schema(prior.keyCol).dataType,
-      b => prior.stats.get(b).flatMap(_.maxLsn))
-    // OPTIMIZE also REFRESHES secondary-column pruning stats for the
-    // buckets it rewrites (r18): a merge drops its touched buckets'
-    // colStats entries, and without this only the next O(table)
-    // ZORDER would re-record them — compaction is the rewrite that
-    // already runs on merge-churned buckets, so it keeps the
-    // inter-file skipping rung alive through ordinary maintenance.
-    // The column set is the table's DECLARED one (whatever any bucket
-    // already records) — compaction never invents new stat columns.
-    val statCols = prior.colStats.values.flatMap(_.keys).toSeq.distinct
-      .filter(c => prior.schema.fields.exists(f =>
-        f.name.equalsIgnoreCase(c) && isColStatsType(f.dataType)))
-    val freshCs = stagedColStats(spark, dir, staging, statCols, written,
-      prior.schema)
-    val freshSs = stagedStrStats(spark, dir, staging,
-      declaredStrCols(prior), written)
-    val freshNs = stagedNullStats(spark, dir, staging,
-      declaredNullCols(prior), written)
+    // silently reset a range table to hash layout). OPTIMIZE also
+    // REFRESHES the secondary-column stats of the buckets it rewrites
+    // (r18): a merge-churned bucket keeps its inter-file skipping rung
+    // through ordinary maintenance. The column set is the table's
+    // DECLARED one — compaction never invents new stat columns.
+    val st = footerStats(spark, dir, staging, prior.schema, prior.keyCol,
+      declaredCols(prior), b => prior.stats.get(b).flatMap(_.maxLsn))
     // emptied-by-omission: a compacted bucket whose every row was
     // tombstoned stages nothing and must LEAVE the map — keeping its
     // old path while retiring its sidecars would resurrect the rows;
     // published through the maintenance auto-rebase (r17 verdict #4)
-    publishMaintenance(spark, dir, prior, fragmented.keys.toSeq,
-      written.map(b => b -> dataRel(staging, b)).toMap, st, freshCs,
-      freshSs, freshNs)
+    publishMaintenance(spark, dir, prior, fragmented.keys.toSeq, st)
     fragmented.keys.toSeq.sorted
   }
 
-  /** Z-ORDER re-cluster (Delta's `OPTIMIZE … ZORDER BY`): rewrite
-    * EVERY bucket with rows sorted by the Morton interleave of the
-    * given columns' quantile-rank codes (1 or 2 numeric columns; one
-    * column degrades to a plain clustered sort). Bucket placement is
-    * untouched — the table's key routing is the hash layout's job —
-    * so this clusters WITHIN buckets: each bucket file's parquet
-    * row groups inherit tight min/max on the z-dimensions, and a
-    * pushed predicate on either column skips row groups instead of
-    * scanning the bucket (the intra-file rung of data skipping; the
-    * manifest's own per-bucket stats stay the inter-file rung on the
-    * KEY). O(table) — the honest cost of re-clustering anywhere —
-    * but one rewrite that every later selective read amortizes, the
-    * published OPTIMIZE ZORDER trade. Split points planned in ONE
-    * distributed agg pass ([[graft.sources.ZOrderLayout]] owns the
-    * approximation-honesty contract: quantile error skews code
-    * boundaries, degrading pruning, never correctness). Tombstones
-    * retire with the rewrite like every other full rewrite. Returns
-    * the rewritten bucket ids (empty table = no-op). */
   /** Declare + record data-skipping stats for `cols` WITHOUT a
     * rewrite (r19 — `ANALYZE TABLE … COMPUTE STATISTICS FOR COLUMNS`,
     * the declaration path that scales): ONE distributed agg over the
@@ -2707,9 +2536,11 @@ object PartitionedUpsert {
     * requested column — published as a METADATA-ONLY commit. The
     * other declaration path (OPTIMIZE ZORDER) costs an O(table)
     * rewrite; at 100 TB "make my predicate prunable" must not require
-    * re-clustering the table. Once declared, every later merge
-    * re-records the columns through the write-riding observe, so the
-    * declaration stays fresh under ordinary churn.
+    * re-clustering the table. Once declared, every later rewrite
+    * (merge, compaction, rebase) re-records the columns off its staged
+    * files' Parquet footers ([[footerStats]]), so the declaration
+    * stays fresh under ordinary churn. ANALYZE itself stays a scan: it
+    * writes no files whose footers could be read.
     *
     * Logical state (tombstones + defaults applied) is exactly what
     * every read serves, so pruning against these stats can never drop
@@ -2799,17 +2630,11 @@ object PartitionedUpsert {
       // entries sound — see scaladoc
       def live[A](m: Map[Long, Map[String, A]]): Map[Long, Map[String, A]] =
         m.filter { case (b, _) => head.buckets.get(b) == prior.buckets.get(b) }
-      def merged[A](base: Map[Long, Map[String, A]],
-                    fresh: Map[Long, Map[String, A]])
-          : Map[Long, Map[String, A]] =
-        (base.keySet ++ fresh.keySet).map { b =>
-          b -> (base.getOrElse(b, Map.empty) ++ fresh.getOrElse(b, Map.empty))
-        }.toMap.filter(_._2.nonEmpty)
       val (liveCs, liveSs, liveNs) = (live(freshCs), live(freshSs), live(freshNs))
       val next = head.copy(version = head.version + 1,
-        colStats = merged(head.colStats, liveCs),
-        strStats = merged(head.strStats, liveSs),
-        nullStats = merged(head.nullStats, liveNs))
+        colStats = mergedStats(head.colStats, liveCs),
+        strStats = mergedStats(head.strStats, liveSs),
+        nullStats = mergedStats(head.nullStats, liveNs))
       try {
         writeManifest(fs, dir, next)
         return fields.map { f =>
@@ -2825,6 +2650,24 @@ object PartitionedUpsert {
         "a metadata swap)")
   }
 
+  /** Z-ORDER re-cluster (Delta's `OPTIMIZE … ZORDER BY`): rewrite
+    * EVERY bucket with rows sorted by the Morton interleave of the
+    * given columns' quantile-rank codes (1 or 2 numeric columns; one
+    * column degrades to a plain clustered sort). Bucket placement is
+    * untouched — the table's key routing is the hash layout's job —
+    * so this clusters WITHIN buckets: each bucket file's parquet
+    * row groups inherit tight min/max on the z-dimensions, and a
+    * pushed predicate on either column skips row groups instead of
+    * scanning the bucket (the intra-file rung of data skipping; the
+    * manifest's own per-bucket stats stay the inter-file rung on the
+    * KEY). O(table) — the honest cost of re-clustering anywhere —
+    * but one rewrite that every later selective read amortizes, the
+    * published OPTIMIZE ZORDER trade. Split points planned in ONE
+    * distributed agg pass ([[graft.sources.ZOrderLayout]] owns the
+    * approximation-honesty contract: quantile error skews code
+    * boundaries, degrading pruning, never correctness). Tombstones
+    * retire with the rewrite like every other full rewrite. Returns
+    * the rewritten bucket ids (empty table = no-op). */
   def optimizeZorder(spark: SparkSession, dir: String, cols: Seq[String],
                      bits: Int = 8): Seq[Long] =
     optimizeZorderFrom(spark, dir, manifestOrFail(spark, dir), cols, bits)
@@ -2898,46 +2741,34 @@ object PartitionedUpsert {
           graft.sources.ZOrderLayout.rankCode(col(n), s)
         }, bits)
       val staging = newStagingName(fs, dir)
-      normalized
+      stageWriter(normalized
         .withColumn("bucket", routeExpr(prior, col(prior.keyCol)))
         .withColumn("__z", z)
         .drop(shadow: _*)
         .repartition(target.size, col("bucket"))
         .sortWithinPartitions(col("bucket"), col("__z"))
-        .drop("__z")
-        .write.mode("errorifexists").partitionBy("bucket")
-        .parquet(s"$dir/data/$staging")
-      val written = listBuckets(fs, s"$dir/data/$staging")
-      val st = stagedStats(spark, fs, dir, staging, written, prior.keyCol,
-        prior.schema(prior.keyCol).dataType,
-        b => prior.stats.get(b).flatMap(_.maxLsn))
+        .drop("__z"))
+        .partitionBy("bucket").parquet(s"$dir/data/$staging")
       // the ZORDER rewrite is the natural REFRESHER for per-bucket
-      // secondary-column ranges (r17 verdict #5 — the inter-file rung
-      // of data skipping on non-key columns): one small agg over the
-      // freshly-staged files records min/max per (bucket, column) for
-      // the stats-typed zorder columns (isColStatsType — exact long
-      // image; a double's truncating cast could prune a matching
-      // bucket, excluded). Driver-bounded: nBuckets rows × ≤4 columns.
-      val statCols = cols.filter(c => isColStatsType(
-        prior.schema.fields.find(_.name.equalsIgnoreCase(c)).get.dataType))
-      val freshCs = stagedColStats(spark, dir, staging, statCols, written,
-        prior.schema)
-      // string zorder columns DECLARE and refresh the bounds face
-      val strCols = cols.filter(c => isStrStatsType(
-        prior.schema.fields.find(_.name.equalsIgnoreCase(c)).get.dataType))
-      val freshSs = stagedStrStats(spark, dir, staging, strCols, written)
-      // every stat-typed zorder column also DECLARES null/row counts
-      // (the IsNull/IsNotNull pruning rung — recorded even where
-      // min/max cannot be, e.g. an all-NULL bucket)
-      val freshNs = stagedNullStats(spark, dir, staging,
-        statCols ++ strCols, written)
+      // secondary-column stats (r17 verdict #5 — the inter-file rung
+      // of data skipping on non-key columns), and it DECLARES them:
+      // exact-image ranges for the stats-typed zorder columns
+      // (isColStatsType — a double's truncating cast could prune a
+      // matching bucket, excluded), bounds for the string ones, and
+      // null/row counts for both (the IsNull/IsNotNull rung — recorded
+      // even where min/max cannot be, e.g. an all-NULL bucket)
+      def typed(ok: org.apache.spark.sql.types.DataType => Boolean) =
+        cols.filter(c => ok(
+          prior.schema.fields.find(_.name.equalsIgnoreCase(c)).get.dataType))
+      val (statCols, strCols) = (typed(isColStatsType), typed(isStrStatsType))
+      val st = footerStats(spark, dir, staging, prior.schema, prior.keyCol,
+        StatCols(statCols, strCols, statCols ++ strCols),
+        b => prior.stats.get(b).flatMap(_.maxLsn))
       // every PRIOR bucket is the rewrite target (z-order is a full
       // re-cluster) — but a racing merge that created a NEW bucket or
       // touched none of ours still lands via the maintenance rebase
-      publishMaintenance(spark, dir, prior, target,
-        written.map(b => b -> dataRel(staging, b)).toMap, st, freshCs,
-        freshSs, freshNs)
-      written.sorted
+      publishMaintenance(spark, dir, prior, target, st)
+      st.rels.keys.toSeq.sorted
     } finally { current.unpersist(); () }
   }
 

@@ -9,8 +9,9 @@ import graft.Tables
   * face of truncated-string bucket stats): a range-layout table whose
   * string column is bucket-correlated is Z-ORDERED BY that string
   * column (recording per-bucket truncated bounds), a merge promotes a
-  * sparse key slice to an out-of-range tier (forcing the write-riding
-  * re-record — stale bounds would prune the promoted rows away), and
+  * sparse key slice to an out-of-range tier (forcing the merge-write
+  * re-record off the staged footers — stale bounds would prune the
+  * promoted rows away), and
   * the result is read back through the DSv2 scan as two
   * filter-pushed legs (equality + prefix) whose union DuckDB replays
   * algebraically. One hash certifies: zorder admission of strings

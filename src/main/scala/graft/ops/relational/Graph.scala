@@ -415,6 +415,8 @@ object Graph {
         .union(e0.select($"v".as("src"), $"u".as("dst")))
     }
     val maxJumpRounds = 16
+    // the fused loop below takes two steps per round
+    assert(maxJumpRounds % 2 == 0, "maxJumpRounds must be even")
     var lbl = memo(spark, dir, "cc_nodes") {
       e0.select($"u".as("node")).union(e0.select($"v".as("node")))
         .distinct()

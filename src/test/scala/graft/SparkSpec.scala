@@ -20,6 +20,8 @@ object SparkSpec {
       .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
+      // GraftSession's posture: footers carry timestamp min/max
+      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
       .config("spark.ui.enabled", "false")
       // the production extension set (functions + MERGE parser) is
       // live in every suite — nothing hides behind a bare session
