@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main. Per key: 3 timed runs, report the median (the first
   * run absorbs residual JIT/codegen warmup; the median hides one-off
@@ -343,11 +342,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val spark = GraftSession.builder(cpus.toInt).master(s"local[$cpus]")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // JVM/session warmup: exercise scan + shuffle + window + parquet paths

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,21 +10,24 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args.drop(2).toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
+    val spark = GraftSession.builder(cpus.toInt).master(s"local[$cpus]")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try {
+        val result = fn(spark, sfDir)
+        // the dump keeps Spark's INT96 timestamps, which the DuckDB
+        // compare reads as zone-less values like the oracle's; graft
+        // tables a key writes before returning its frame use the
+        // session's TIMESTAMP_MICROS, whose footers carry min/max
+        ConfScope.withConfs(spark,
+            "spark.sql.parquet.outputTimestampType" -> "INT96") {
+          result.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+        }
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }

@@ -3,9 +3,10 @@ package graft.functions
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext,
+  EmptyBlock, ExprCode, JavaCode, TrueLiteral}
 import org.apache.spark.sql.functions.call_function
-import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
+import org.apache.spark.sql.types.{BinaryType, DataType, LongType, NullType}
 
 /** Native codegen kernels for the perceptual media fingerprints
   * (optimization r20 — the "graft_dot precedent" applied to the
@@ -37,12 +38,13 @@ private[graft] trait MediaHashExpr extends UnaryExpression {
   // malformed payloads yield NULL even when the input is non-null
   override def nullable: Boolean = true
 
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType != BinaryType)
-      TypeCheckResult.TypeCheckFailure(
-        s"$prettyName requires a binary argument, got " +
-          child.dataType.catalogString)
-    else TypeCheckResult.TypeCheckSuccess
+  // binary only, plus an uncast NULL literal (NullType), which hashes
+  // to NULL
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case BinaryType | NullType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(
+      s"$prettyName requires a binary argument, got ${other.catalogString}")
+  }
 
   /** Fully-qualified static kernel entry, e.g.
     * "graft.functions.MediaHash$.MODULE$.imgDHashOrNull". */
@@ -55,7 +57,10 @@ private[graft] trait MediaHashExpr extends UnaryExpression {
 
   override protected def doGenCode(ctx: CodegenContext,
                                    ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c => {
+    if (child.dataType == NullType)
+      ev.copy(code = EmptyBlock, isNull = TrueLiteral,
+        value = JavaCode.defaultLiteral(dataType))
+    else nullSafeCodeGen(ctx, ev, c => {
       val boxed = ctx.freshName("fp")
       s"""
          |java.lang.Long $boxed = $kernel($c);

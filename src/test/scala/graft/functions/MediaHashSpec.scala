@@ -114,4 +114,23 @@ class MediaHashSpec extends SparkSpec {
       Multimodal.wavEnvelopeHash(lit(null).cast("binary")).as("k")).head()
     assert(r.isNullAt(0))
   }
+
+  test("uncast NULL (NullType) input → NULL on both kernels, folded " +
+      "and generated; other non-binary input is still rejected") {
+    def hashes() = spark.range(0, 3, 1, 1).select(
+      Multimodal.dHash(lit(null)).as("img"),
+      Multimodal.wavEnvelopeHash(lit(null)).as("wav")).collect()
+    assert(hashes().forall(r => r.isNullAt(0) && r.isNullAt(1)))
+    // constant folding off: the projection's generated code runs
+    graft.ConfScope.withConfs(spark, "spark.sql.optimizer.excludedRules" ->
+        "org.apache.spark.sql.catalyst.optimizer.ConstantFolding") {
+      assert(hashes().forall(r => r.isNullAt(0) && r.isNullAt(1)))
+    }
+    Seq(lit("494D4747"), lit(7L)).foreach { bad =>
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.range(1).select(Multimodal.dHash(bad)).collect()
+      }
+      assert(e.getMessage.contains("requires a binary argument"), e.getMessage)
+    }
+  }
 }

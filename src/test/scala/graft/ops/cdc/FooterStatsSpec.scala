@@ -16,7 +16,8 @@ import graft.{ConfScope, SparkSpec}
   * declared stats column, `strStatEntry` over the exact string
   * (min, max), and (nulls, rows). Generated tables and batches go
   * through ZORDER (which declares every face), MERGE (≤64 and >64
-  * touched buckets) and compaction, over byte, int, long, date,
+  * touched buckets), compaction, a full replace and a rebucket to
+  * another bucket count, over byte, int, long, date,
   * timestamp, decimal(12,2) and string columns — strings multi-byte,
   * straddling the 32-code-point cap and past Parquet's 4 KB
   * statistics limit; all-NULL columns in some buckets; one bucket
@@ -189,6 +190,13 @@ class FooterStatsSpec extends SparkSpec {
         refs += check(dir, n, "compact")
       }
     }
+    // new contents, then a new bucket count: both re-record the
+    // declared columns off their own staged footers
+    PartitionedUpsert.replace(frame(sc.batches.last.upserts).repartition(2), dir)
+    refs += check(dir, n, "replace")
+    val rebucketed = n / 2 + 1
+    PartitionedUpsert.rebucket(spark, dir, "k", rebucketed)
+    refs += check(dir, rebucketed, "rebucket")
     val all = refs.flatMap(_.values)
     assert(all.exists(r => r.nulls.values.exists(p => p._1 == p._2)),
       "no all-NULL (bucket, column) was generated")
