@@ -339,6 +339,31 @@ object Bench {
       .getSystemLoadAverage
     catch { case _: Throwable => -1.0 }
 
+  /** One key's measurement. `compiles` are the codegen classes
+    * compiled while the key's runs executed (a [[compileCount]] delta
+    * around all of its runs), `compileMs` the time spent compiling
+    * them ([[compileMsOf]]). */
+  private final case class KeyResult(name: String, median: Double,
+                                     runs: Vector[Double], fp: String,
+                                     planText: String,
+                                     warmup: Option[Double],
+                                     outliers: List[Double], load: Double,
+                                     compiles: Long, compileMs: Double)
+
+  private def compileHistogram =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+
+  /** Codegen classes compiled so far in this JVM. */
+  private def compileCount(): Long = compileHistogram.getCount
+
+  /** Estimated ms to compile `n` classes just compiled: `n` times the
+    * mean of Spark's compile-time histogram. The histogram keeps no
+    * sum, and its decaying sample weights recent compiles most, so
+    * its mean stands in for theirs (a difference of count × mean
+    * taken before and after swings with the mean, even below 0). */
+  private def compileMsOf(n: Long): Double =
+    n * compileHistogram.getSnapshot.getMean
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -359,6 +384,7 @@ object Bench {
       if (args.isEmpty) _ => true else k => args.exists(k.contains)
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(kv => keyFilter(kv._1)).map { case (name, fn) =>
+      val compiles0 = compileCount()
       var lastDf: org.apache.spark.sql.DataFrame = null
       def once(): Double = {
         val t0 = System.nanoTime()
@@ -488,11 +514,12 @@ object Bench {
       // would defer block reclaim to the NEXT key's gc — re-creating
       // (one key late) the storage pressure this gc exists to clear
       lastDf = null
+      val compiles = compileCount() - compiles0
       System.gc()
-      (name, medianOf(runs), runs, fp, planText, warmupDropped,
-        outliers.toList, loadAvg())
+      KeyResult(name, medianOf(runs), runs, fp, planText, warmupDropped,
+        outliers.toList, loadAvg(), compiles, compileMsOf(compiles))
     }
-    val total = results.map(_._2).sum
+    val total = results.map(_.median).sum
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
 
     // Prior per-key medians: the bench_results.json the PREVIOUS round
@@ -531,9 +558,9 @@ object Bench {
     // keys failing THIS round contribute near-zero medians — exclude
     // them from ratios so they neither drag the drift median down nor
     // appear as (meaningless) per-key ratios themselves
-    val ratios = results.flatMap { case (k, m, _, _, _, _, _, _) =>
-      if (failed.contains(k)) None
-      else prior.get(k).filter(_ > 0).map(p => (k, m, p, m / p)) }
+    val ratios = results.flatMap { r =>
+      if (failed.contains(r.name)) None
+      else prior.get(r.name).filter(_ > 0).map(p => (r.name, r.median, p, r.median / p)) }
     val drift =
       if (ratios.isEmpty) 1.0
       else ratios.map(_._4).sorted.apply(ratios.size / 2)
@@ -555,8 +582,8 @@ object Bench {
           .findAllMatchIn(txt).map(m => m.group(1) -> m.group(2)).toMap
       } catch { case _: Throwable => Map.empty }
     val planChanged = results.collect {
-      case (k, _, _, f, _, _, _, _) if f.nonEmpty &&
-        priorPlans.get(k).exists(p => p.nonEmpty && p != f) => k
+      case r if r.fp.nonEmpty &&
+        priorPlans.get(r.name).exists(p => p.nonEmpty && p != r.fp) => r.name
     }.sorted
     val planChangedJson = planChanged.map("\"" + _ + "\"").mkString("[", ",", "]")
 
@@ -573,7 +600,7 @@ object Bench {
         catch { case _: Throwable => Map.empty }
       val w = new java.io.PrintWriter("bench_plan_diffs.txt")
       try planChanged.foreach { k =>
-        val cur = results.find(_._1 == k).map(_._5).getOrElse("")
+        val cur = results.find(_.name == k).map(_.planText).getOrElse("")
         w.println(s"==== $k ==== PRIOR ====")
         w.println(priorTexts.getOrElse(k, "(no prior plan text recorded)"))
         w.println(s"==== $k ==== CURRENT ====")
@@ -584,8 +611,8 @@ object Bench {
     if (args.isEmpty) try {
       val w = new java.io.PrintWriter("bench_plans.json")
       try {
-        val body = results.collect { case (k, _, _, f, t, _, _, _) if f.nonEmpty =>
-          s""""$k":"${jsonEsc(t)}"""" }.mkString("{", ",", "}")
+        val body = results.collect { case r if r.fp.nonEmpty =>
+          s""""${r.name}":"${jsonEsc(r.planText)}"""" }.mkString("{", ",", "}")
         w.println(body)
       } finally w.close()
     } catch { case _: Throwable => () }
@@ -593,7 +620,8 @@ object Bench {
     // Full-precision artifact (all surviving runs per key — 3 normally,
     // 2 when the replacement bound exhausted — plus any rejected
     // `outliers` and the dropped `warmup`) for offline reads.
-    val fullQs = results.map { case (k, m, rs, f, _, wu, outs, load) =>
+    val fullQs = results.map { r =>
+      val KeyResult(k, m, rs, f, _, wu, outs, load, compiles, compileMs) = r
       val pr = prior.get(k).map(p => f""","prior":$p%.6f""").getOrElse("")
       val w = wu.map(x => f""","warmup":$x%.6f""").getOrElse("")
       val o = if (outs.isEmpty) ""
@@ -607,13 +635,13 @@ object Bench {
         if (drift > 0 && !failed.contains(k))
           f""","normalized":${m / drift}%.6f"""
         else ""
-      f""""$k":{"median":$m%.6f$nrm,"reps":${rs.size},"runs":$runsStr$pr$w$o,"load":$load%.2f,"plan":"$f"}"""
+      f""""$k":{"median":$m%.6f$nrm,"reps":${rs.size},"runs":$runsStr$pr$w$o,"load":$load%.2f,"plan":"$f","codegen_compiles":$compiles,"codegen_compile_ms":$compileMs%.1f}"""
     }.mkString("{", ",", "}")
     // header `reps` is the PROTOCOL (3 timed reps per key);
     // `min_surviving_reps` records the floor after outlier drops
     // (r18 ADVICE: a hardcoded 3 misread when a key survived with 2)
     val minReps =
-      if (results.isEmpty) 3 else results.map(_._3.size).min
+      if (results.isEmpty) 3 else results.map(_.runs.size).min
     val full = f"""{"metric":"total","value":$total%.6f,"unit":"sec","reps":3,"min_surviving_reps":$minReps,"stat":"median","cpus":"$cpus","drift":$drift%.4f,"regressions":$regressionsJson,"plan_changed":$planChangedJson,"queries":$fullQs,"failed":$failedJson,"sf":"$sfDir"}"""
     // A filtered run must not clobber the full-surface baseline the
     // regression gate reads.
@@ -627,7 +655,7 @@ object Bench {
     // tail always contains a parseable total even when the per-key line's
     // head is truncated (BENCH_r05 "parsed": null — VERDICT r5 #4). Full
     // per-key data lives in bench_results.json either way.
-    val qs = results.map { case (k, m, _, _, _, _, _, _) => f""""$k":$m%.3f""" }
+    val qs = results.map(r => f""""${r.name}":${r.median}%.3f""")
       .mkString("{", ",", "}")
     println(f"""{"metric":"per_key","queries":$qs,"sf":"$sfDir"}""")
     println(f"""{"metric":"total","value":$total%.3f,"unit":"sec","reps":3,"stat":"median","keys":${results.size},"cpus":"$cpus","drift":$drift%.2f,"regressions":$regressionsJson,"plan_changed":$planChangedJson,"failed":$failedJson,"detail":"bench_results.json","sf":"$sfDir"}""")

@@ -15,6 +15,7 @@ import org.apache.spark.sql.SparkSession
   *   timestamp column would record no range and never prune
   * - native function registration (graft_dot, graft_normalize_text,
   *   graft_char_shingles)
+  * - a generated-class cache of [[CodegenCacheEntries]] (see there)
   *
   * Deliberately NOT set: `spark.sql.parquet.aggregatePushdown` — it
   * only fires on the DSv2 path (empty `useV1SourceList`), and flipping
@@ -29,9 +30,25 @@ import org.apache.spark.sql.SparkSession
   */
 object GraftSession {
 
+  /** Entries of Spark's generated-class cache
+    * (`spark.sql.codegen.cache.maxEntries`, default 100). A graft
+    * session is long-lived and runs a recurring statement mix: one
+    * round of SQL MERGE, UPDATE, DELETE, point reads, aggregates and a
+    * streamed change file needs about 110 recurring classes plus about
+    * 30 one-offs whose code inlines a literal (an lsn, a key). Under
+    * the default LRU of 100 the recurring classes evict each other, so
+    * every statement recompiled all of its code every time, about 140
+    * compiles per round. Ten times the default keeps the whole mix
+    * resident with room for the one-offs (BASELINE.md: about 140 → 28
+    * compiles per round, live heap unchanged within noise). The cache
+    * is sized once, from the session conf active at the JVM's first
+    * codegen, so it must be set here, on the builder, and not later. */
+  val CodegenCacheEntries = 1000
+
   def builder(cores: Int = Runtime.getRuntime.availableProcessors())
       : SparkSession.Builder =
     SparkSession.builder()
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
       .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")

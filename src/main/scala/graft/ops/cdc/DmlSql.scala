@@ -224,16 +224,20 @@ object DmlSql {
   }
 
   /** `DELETE FROM <catalog graft table> [WHERE …]` — statement text
-    * in, touched buckets out. */
-  def deleteCatalogTable(spark: SparkSession, sqlText: String): Seq[Long] = {
+    * in, touched buckets out. `location` is the target's already
+    * resolved location (None resolves it here). */
+  def deleteCatalogTable(spark: SparkSession, sqlText: String,
+                         location: Option[String] = None): Seq[Long] = {
     val d = parseDml(sqlText, isUpdate = false)
-    run(spark, d, isUpdate = false, tableLocation(spark, d.table))
+    run(spark, d, isUpdate = false, location.getOrElse(tableLocation(spark, d.table)))
   }
 
-  /** `UPDATE <catalog graft table> SET … [WHERE …]`. */
-  def updateCatalogTable(spark: SparkSession, sqlText: String): Seq[Long] = {
+  /** `UPDATE <catalog graft table> SET … [WHERE …]`, `location` as for
+    * [[deleteCatalogTable]]. */
+  def updateCatalogTable(spark: SparkSession, sqlText: String,
+                         location: Option[String] = None): Seq[Long] = {
     val d = parseDml(sqlText, isUpdate = true)
-    run(spark, d, isUpdate = true, tableLocation(spark, d.table))
+    run(spark, d, isUpdate = true, location.getOrElse(tableLocation(spark, d.table)))
   }
 
   /** Structural validation for the parser hook (parse time — no

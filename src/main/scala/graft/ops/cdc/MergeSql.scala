@@ -657,15 +657,17 @@ object MergeSql {
   /** [[mergeCatalogTable]] with the lsn derived instead of passed:
     * target manifest version + 1 — monotone across commits, no clock
     * (the INSERT INTO rule). This is what `spark.sql("MERGE INTO …")`
-    * runs via the injected parser. */
-  def mergeCatalogTableAuto(spark: SparkSession, sqlText: String): Seq[Long] = {
+    * runs via the injected parser, passing the `location` it already
+    * resolved; None resolves it here. */
+  def mergeCatalogTableAuto(spark: SparkSession, sqlText: String,
+                            location: Option[String] = None): Seq[Long] = {
     val m = parseStatement(sqlText)
     val name = m.target match {
       case NamedRel(n, _) => n
       case SubqueryRel(_) => throw new IllegalArgumentException(
         "MERGE INTO (subquery) cannot target a persisted table")
     }
-    val dir = tableLocation(spark, name)
+    val dir = location.getOrElse(tableLocation(spark, name))
     val lsn = PartitionedUpsert.manifestOrFail(spark, dir).version + 1
     statementIntoTable(spark, sqlText, dir, lsn)
   }
@@ -694,10 +696,15 @@ object MergeSql {
     * `Name` row ([[graft.sources.GraftTable]] renders
     * ``graft.`<dir>`@v<version>`` — our own stable format). Temp
     * views have neither — the clear error tells the caller to use
-    * [[resolveStatement]] (pure-frame) instead. */
+    * [[resolveStatement]] (pure-frame) instead. One driver-side
+    * command and no Spark job: the command's rows are collected as
+    * they are and searched on the driver (a `filter` over them would
+    * plan and run a job); the table-information rows follow the
+    * column rows, so they win a name clash. A SQL statement resolves
+    * its target once, in the parser command's fallback probe, and
+    * passes the result down. */
   private[cdc] def tableLocation(spark: SparkSession, name: String): String = {
-    val desc = spark.sql(s"DESCRIBE TABLE EXTENDED $name")
-      .filter(col("col_name").isin("Location", "Name")).collect()
+    val desc = spark.sql(s"DESCRIBE TABLE EXTENDED $name").collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     desc.get("Location")
       .orElse(desc.get("Name").collect {

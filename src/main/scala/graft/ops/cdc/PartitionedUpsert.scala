@@ -2478,7 +2478,9 @@ object PartitionedUpsert {
     * see old or new files never a mix, a crash leaves the old table
     * intact, and a racing write to a compacted bucket makes it refuse
     * ([[publishMaintenance]]).
-    * O(fragmented buckets), not O(table). Returns the bucket ids
+    * O(fragmented buckets), not O(table): file counts come from the
+    * manifest's [[BucketStat]]s, so finding the fragmented buckets
+    * lists only buckets that have no stat. Returns the bucket ids
     * compacted (empty = nothing fragmented, no table version burned). */
   def compactFiles(spark: SparkSession, dir: String,
                    maxFilesPerBucket: Int = 4): Seq[Long] =
@@ -2492,9 +2494,8 @@ object PartitionedUpsert {
     require(maxFilesPerBucket >= 1,
       s"maxFilesPerBucket must be >= 1, got $maxFilesPerBucket")
     val fs = fsOf(spark, dir)
-    val fragmented = prior.buckets.filter { case (_, rel) =>
-      fs.listStatus(new Path(resolveRel(dir, rel)))
-        .count(_.getPath.getName.endsWith(".parquet")) > maxFilesPerBucket
+    val fragmented = prior.buckets.filter { case (b, rel) =>
+      bucketStatOf(fs, dir, prior, b, rel).files > maxFilesPerBucket
     }
     if (fragmented.isEmpty) return Seq.empty
     val staging = newStagingName(fs, dir)
@@ -2766,13 +2767,20 @@ object PartitionedUpsert {
     val m = currentManifest(spark, dir).getOrElse(
       throw new IllegalStateException(s"$dir is not an initialized upsert target"))
     m.buckets.toSeq.sortBy(_._1).map { case (b, rel) =>
-      b -> m.stats.getOrElse(b, {
-        val files = fs.listStatus(new Path(resolveRel(dir, rel)))
-          .filter(_.getPath.getName.endsWith(".parquet"))
-        BucketStat(files.length, files.map(_.getLen).sum, None, None, None)
-      })
+      b -> bucketStatOf(fs, dir, m, b, rel)
     }
   }
+
+  /** Bucket `b`'s stat from manifest `m`, or — for a bucket committed
+    * before stats existed — its files and bytes from one listing of
+    * `rel`, with unknown ranges. */
+  private def bucketStatOf(fs: FileSystem, dir: String, m: Manifest,
+                           b: Long, rel: String): BucketStat =
+    m.stats.getOrElse(b, {
+      val files = fs.listStatus(new Path(resolveRel(dir, rel)))
+        .filter(_.getPath.getName.endsWith(".parquet"))
+      BucketStat(files.length, files.map(_.getLen).sum, None, None, None)
+    })
 
   /** Rows with `lo <= key <= hi`, reading ONLY buckets whose recorded
     * key range intersects the interval (stats-less buckets are read —
@@ -2856,14 +2864,18 @@ object PartitionedUpsert {
     * files — same hazard requireLayout guards against for writers).
     * Reads at most min(|distinct keys|, nBuckets) buckets, never the
     * whole table: the cost of a stream-vs-history lookup is bounded by
-    * the BATCH size, not the corpus size. The distinct-bucket collect
-    * is ≤ nBuckets longs of driver state (same bound as prepare). */
+    * the BATCH size, not the corpus size. The touched buckets are
+    * found by ONE job with no shuffle: each partition of `keys`
+    * dedupes its routed buckets locally and the driver unions the
+    * sets — ≤ nBuckets longs per partition of driver state (a NULL key
+    * routes to its deterministic bucket like any other). */
   def readForKeys(spark: SparkSession, dir: String, keys: DataFrame,
                   keyCol: String): DataFrame = {
     val m = currentManifest(spark, dir).getOrElse(
       throw new IllegalStateException(s"$dir is not an initialized upsert target"))
-    val touched = keys.select(routeExpr(m, col(keyCol)).as("__b"))
-      .distinct().collect().map(_.getLong(0)).toSeq.sorted
+    val touched = keys.select(routeExpr(m, col(keyCol))).rdd
+      .mapPartitions(rows => rows.map(_.getLong(0)).toSet.iterator)
+      .collect().distinct.toSeq.sorted
     bucketsDf(spark, dir, m, only = Some(touched))
   }
 

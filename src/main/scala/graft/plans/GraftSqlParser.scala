@@ -205,17 +205,23 @@ class GraftSqlParser(delegate: ParserInterface) extends ParserInterface {
   * never take it — their delegate plan is Spark's describe-column
   * misparse whose rows would be discarded or wrong-schema'd, so they
   * keep the old no-fallback behavior and raise the specific graft
-  * error on non-graft targets. */
+  * error on non-graft targets.
+  *
+  * The graft path receives the location this probe resolved, so a
+  * statement that uses it (MERGE/UPDATE/DELETE) looks its target up
+  * once; None leaves the lookup, and its specific error, to the graft
+  * path. */
 private[plans] object GraftSqlFallback {
   def run(session: SparkSession, targetName: Option[String],
-          fallback: Option[LogicalPlan])(graftRun: => Seq[Row]): Seq[Row] = {
+          fallback: Option[LogicalPlan])
+         (graftRun: Option[String] => Seq[Row]): Seq[Row] = {
     val loc = targetName.flatMap(DmlSql.resolvedLocation(session, _))
     val nonGraft = loc.exists(d => !DmlSql.hasGraftManifest(session, d))
     fallback match {
       case Some(plan) if nonGraft =>
         session.sessionState.executePlan(plan).executedPlan.executeCollect()
         Seq.empty
-      case _ => graftRun
+      case _ => graftRun(loc)
     }
   }
 }
@@ -233,8 +239,8 @@ final case class GraftMergeSqlCommand(sqlText: String,
     Seq(AttributeReference("touched_buckets", LongType, nullable = false)())
 
   override def run(session: SparkSession): Seq[Row] =
-    GraftSqlFallback.run(session, MergeSql.targetName(sqlText), fallback) {
-      val touched = MergeSql.mergeCatalogTableAuto(session, sqlText)
+    GraftSqlFallback.run(session, MergeSql.targetName(sqlText), fallback) { loc =>
+      val touched = MergeSql.mergeCatalogTableAuto(session, sqlText, loc)
       Seq(Row(touched.size.toLong))
     }
 }
@@ -251,10 +257,10 @@ final case class GraftDmlSqlCommand(sqlText: String, isUpdate: Boolean,
 
   override def run(session: SparkSession): Seq[Row] =
     GraftSqlFallback.run(session,
-      Some(DmlSql.dmlTargetName(sqlText, isUpdate)), fallback) {
+      Some(DmlSql.dmlTargetName(sqlText, isUpdate)), fallback) { loc =>
       val touched =
-        if (isUpdate) DmlSql.updateCatalogTable(session, sqlText)
-        else DmlSql.deleteCatalogTable(session, sqlText)
+        if (isUpdate) DmlSql.updateCatalogTable(session, sqlText, loc)
+        else DmlSql.deleteCatalogTable(session, sqlText, loc)
       Seq(Row(touched.size.toLong))
     }
 }
@@ -339,7 +345,7 @@ final case class GraftAlterCommand(sqlText: String,
   override val output: Seq[Attribute] = Nil
   override def run(session: SparkSession): Seq[Row] =
     GraftSqlFallback.run(session,
-      Some(DmlSql.alterTargetName(sqlText)), fallback) {
+      Some(DmlSql.alterTargetName(sqlText)), fallback) { _ =>
       DmlSql.alterCatalogTable(session, sqlText)
       Seq.empty
     }
@@ -356,7 +362,7 @@ final case class GraftTruncateCommand(sqlText: String,
   override val output: Seq[Attribute] = Nil
   override def run(session: SparkSession): Seq[Row] =
     GraftSqlFallback.run(session,
-      Some(DmlSql.truncateTargetName(sqlText)), fallback) {
+      Some(DmlSql.truncateTargetName(sqlText)), fallback) { _ =>
       DmlSql.truncateCatalogTable(session, sqlText)
       Seq.empty
     }
@@ -375,7 +381,7 @@ final case class GraftRestoreCommand(sqlText: String,
   override val output: Seq[Attribute] = Nil
   override def run(session: SparkSession): Seq[Row] =
     GraftSqlFallback.run(session,
-      Some(DmlSql.restoreTargetName(sqlText)), fallback) {
+      Some(DmlSql.restoreTargetName(sqlText)), fallback) { _ =>
       DmlSql.restoreCatalogTable(session, sqlText)
       Seq.empty
     }
@@ -395,7 +401,7 @@ final case class GraftReorgCommand(sqlText: String,
 
   override def run(session: SparkSession): Seq[Row] =
     GraftSqlFallback.run(session,
-      Some(DmlSql.reorgTargetName(sqlText)), fallback) {
+      Some(DmlSql.reorgTargetName(sqlText)), fallback) { _ =>
       Seq(Row(DmlSql.reorgCatalogTable(session, sqlText).size.toLong))
     }
 }
@@ -413,7 +419,7 @@ final case class GraftShallowCloneCommand(sqlText: String,
   override val output: Seq[Attribute] = Nil
   override def run(session: SparkSession): Seq[Row] =
     GraftSqlFallback.run(session,
-      Some(DmlSql.shallowCloneSourceName(sqlText)), fallback) {
+      Some(DmlSql.shallowCloneSourceName(sqlText)), fallback) { _ =>
       DmlSql.shallowCloneCatalogTable(session, sqlText)
       Seq.empty
     }
@@ -441,7 +447,7 @@ final case class GraftAnalyzeCommand(sqlText: String,
 
   override def run(session: SparkSession): Seq[Row] =
     GraftSqlFallback.run(session,
-      Some(DmlSql.analyzeTargetName(sqlText)), fallback) {
+      Some(DmlSql.analyzeTargetName(sqlText)), fallback) { _ =>
       DmlSql.analyzeCatalogTable(session, sqlText).map {
         case (c, l, s, n) => Row(c, l, s, n)
       }
@@ -468,7 +474,7 @@ final case class GraftMaintenanceCommand(sqlText: String, isVacuum: Boolean,
   override def run(session: SparkSession): Seq[Row] = {
     val verb = if (isVacuum) "VACUUM" else "OPTIMIZE"
     GraftSqlFallback.run(session,
-      Some(DmlSql.maintTargetName(sqlText, verb)), fallback) {
+      Some(DmlSql.maintTargetName(sqlText, verb)), fallback) { _ =>
       if (isDryRun)
         DmlSql.vacuumDryRunCatalogTable(session, sqlText).map(Row(_))
       else if (isVacuum) {

@@ -14,18 +14,14 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Built by the production builder, so every suite runs under the
+    * posture the mains run under (extensions, UTC, TIMESTAMP_MICROS
+    * footers, the codegen cache size) — nothing hides behind a bare
+    * session. */
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
+    val s = GraftSession.builder(4)
       .master("local[4]")
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      // GraftSession's posture: footers carry timestamp min/max
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.ui.enabled", "false")
-      // the production extension set (functions + MERGE parser) is
-      // live in every suite — nothing hides behind a bare session
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
