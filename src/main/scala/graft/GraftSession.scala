@@ -13,8 +13,10 @@ import org.apache.spark.sql.SparkSession
   *   no min/max, and graft tables read their write-time column stats
   *   off the footers of the files each write stages — an INT96
   *   timestamp column would record no range and never prune
-  * - native function registration (graft_dot, graft_normalize_text,
-  *   graft_char_shingles)
+  * - the graft extensions: native functions (graft_dot,
+  *   graft_normalize_text, graft_char_shingles, …), the statement
+  *   parser, and the rule that reads graft tables through Spark's own
+  *   Parquet file scan (a session without it reads them unpruned)
   * - a generated-class cache of [[CodegenCacheEntries]] (see there)
   *
   * Deliberately NOT set: `spark.sql.parquet.aggregatePushdown` — it

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Micro-benchmark: HOF dot product (aggregate+zip_with) vs the native
@@ -10,10 +9,7 @@ object MicroBench {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val nQ = args.lift(1).map(_.toInt).getOrElse(200)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(32).master("local[32]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     functions.VectorExpressions.register(spark)

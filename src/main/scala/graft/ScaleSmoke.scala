@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scale smoke: synthesizes a ~10× corpus (sf≈1: 6M lineitem / 1.5M
@@ -13,12 +13,8 @@ object ScaleSmoke {
   def main(args: Array[String]): Unit = {
     val factor = args.headOption.map(_.toInt).getOrElse(10)
     val work = args.lift(1).getOrElse("/tmp/graft_scale")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
+    // 64 shuffle partitions on 32 cores
+    val spark = GraftSession.builder(64).master("local[32]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     val src = "/root/testdata/sf0.1"

@@ -103,13 +103,18 @@ object VectorExpressions {
 /** SparkSessionExtensions hook: enable with
   * `spark.sql.extensions=graft.functions.GraftExtensions` — registers
   * ALL the native graft functions at session build, SQL and DataFrame
-  * both (the config-file twin of GraftSession.registerFunctions). */
+  * both (the config-file twin of GraftSession.registerFunctions), the
+  * graft statement parser, and the rule that reads graft tables
+  * through Spark's own Parquet file scan. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     // statement-text MERGE INTO against graft tables via plain
     // spark.sql — non-MERGE statements delegate untouched
     // (graft.plans.GraftSqlParser scaladoc has the 3-stage contract)
     ext.injectParser((_, delegate) => new graft.plans.GraftSqlParser(delegate))
+    // reads of graft tables through Spark's own Parquet file scan
+    // (graft.sources.GraftReadRule scaladoc)
+    ext.injectResolutionRule(session => new graft.sources.GraftReadRule(session))
     ext.injectFunction((
       FunctionIdentifier("graft_dot"),
       new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),

@@ -527,10 +527,13 @@ object CdcQueries {
       Seq("seg"), Seq("cents"))
     val maintained = AggMaintain.deltaApply(agg1, deltas,
       Seq("seg"), Seq("cents"))
+    // materialized inside the scope: a lazy frame would plan its final
+    // exchanges when the caller runs it, after the scope restored the
+    // session default
     AggMaintain.exposed(maintained, Seq("seg"), Seq("cents"))
       .select($"seg", $"cnt", $"sum_cents",
         round($"avg_cents", 4).as("avg_cents"))
-      .orderBy($"seg")
+      .orderBy($"seg").localCheckpoint()
     }
   }
 

@@ -430,7 +430,7 @@ object PartitionedUpsert {
     * except SHALLOW-CLONE borrows, which carry an `ext:` prefix and an
     * absolute path into the SOURCE table ([[clone]]). One resolver so
     * no reader can interpret the two shapes differently. */
-  private[graft] def resolveRel(dir: String, rel: String): String =
+  def resolveRel(dir: String, rel: String): String =
     if (rel.startsWith(ExtPrefix)) rel.stripPrefix(ExtPrefix) else s"$dir/$rel"
 
   private[graft] val ExtPrefix = "ext:"
@@ -1361,64 +1361,66 @@ object PartitionedUpsert {
     } finally { withBucket.unpersist(); () }
   }
 
-  /** Package door for companion indexes ([[BloomIndex]]): read only
-    * the named buckets of a resolved manifest / route a caller frame's
-    * key the way this manifest does. Same visibility rationale as the
-    * FkIndex imports — companions must not reimplement routing. */
+  /** Doors for companion indexes ([[BloomIndex]], the read path's
+    * [[org.apache.spark.sql.graft.GraftFileIndex]]): read only the
+    * named buckets of a resolved manifest / route a caller frame's key
+    * the way this manifest does — companions must not reimplement
+    * routing. */
   private[cdc] def readBuckets(spark: SparkSession, dir: String,
                                m: Manifest, buckets: Seq[Long]): DataFrame =
     bucketsDf(spark, dir, m, only = Some(buckets))
 
-  private[cdc] def routeFor(m: Manifest, k: org.apache.spark.sql.Column)
+  def routeFor(m: Manifest, k: org.apache.spark.sql.Column)
       : org.apache.spark.sql.Column = routeExpr(m, k)
 
   /** Tombstone sidecars above this total footprint hash-join instead
     * of broadcasting (a delete wave bigger than executor broadcast
     * budget must not OOM the read path; the threshold mirrors Spark's
-    * own autoBroadcastJoinThreshold order of magnitude). Shared with
-    * the DSv2 scan so the two read faces can never drift. */
-  private[graft] val TombBroadcastBytes: Long = 32L << 20
+    * own autoBroadcastJoinThreshold order of magnitude). */
+  private val TombBroadcastBytes: Long = 32L << 20
 
   /** Materialize a manifest ('s listed files) as a DataFrame; `only`
     * restricts to a subset of BUCKET IDS (path-pruned merge read; ids
     * absent from the manifest are ignored, so callers can pass routed
-    * ids without membership checks). Buckets carrying merge-on-read
-    * tombstones get their recorded DELETED KEYS anti-joined away here
-    * — the ONE materialization point every reader (merge, CDF diff,
-    * time travel, point lookup) flows through, so no reader can see a
-    * tombstoned row. A deleted key can only live in the bucket it
-    * routes to, so the union of the SELECTED buckets' sidecars is
-    * exact for any bucket subset; the sidecar footprint rides in the
-    * manifest, so the broadcast decision costs zero FS calls. */
+    * ids without membership checks). The ONE read-plan builder every
+    * face goes through — merge, CDF diff, time travel, point lookup,
+    * and every catalog and `format("graft")` read (the resolution rule
+    * [[graft.sources.GraftReadRule]] swaps a graft table's DSv2
+    * relation for this plan). Its base is Spark's own Parquet file
+    * scan over a [[org.apache.spark.sql.graft.GraftFileIndex]], whose
+    * `listFiles` prunes buckets by the filters Spark pushes into the
+    * scan (`bloomIndexDir` adds a bloom sidecar's candidates), so a
+    * filter placed on this frame by any caller prunes buckets too.
+    *
+    * Column DEFAULTs (r18): buckets group by WHICH defaults apply
+    * ([[ColDefault.activeFor]] — the files of an active bucket
+    * physically lack the column, so filling the whole column is the
+    * per-file-era semantics); one scan per group, unioned, the fill
+    * below any filter so a predicate on the column sees the default.
+    * Buckets carrying merge-on-read tombstones get their recorded
+    * DELETED KEYS anti-joined away, so no reader can see a tombstoned
+    * row. A deleted key can only live in the bucket it routes to, so
+    * the union of the SELECTED buckets' sidecars is exact for any
+    * bucket subset; the sidecar footprint rides in the manifest, so
+    * the broadcast decision costs zero FS calls. */
   private def bucketsDf(spark: SparkSession, dir: String, m: Manifest,
-                        only: Option[Seq[Long]] = None): DataFrame = {
+                        only: Option[Seq[Long]] = None,
+                        bloomIndexDir: Option[String] = None): DataFrame = {
     val ids = only.getOrElse(m.buckets.keys.toSeq)
       .filter(m.buckets.contains).distinct.sorted
-    val paths = ids.map(b => resolveRel(dir, m.buckets(b)))
+    def scan(bs: Seq[Long]): DataFrame =
+      org.apache.spark.sql.graft.GraftFileIndex.scan(spark, dir, m,
+        Some(bs), bloomIndexDir)
     val active = m.defaults.filter(_.pre.nonEmpty)
+    val groups = ids.groupBy(b => active.filter(_.activeFor(m, b)))
     val base =
-      if (paths.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          m.schema)
-      else if (active.isEmpty) spark.read.schema(m.schema).parquet(paths: _*)
-      else {
-        // column DEFAULTs (r18): buckets group by WHICH defaults apply
-        // (ColDefault.activeFor — the files of an active bucket
-        // physically lack the column, so filling the whole column is
-        // the per-file-era semantics); one read per group, unioned.
-        // Group count is ≤ distinct default-sets actually live — in
-        // practice 2 (pre-add buckets, rewritten buckets).
-        ids.groupBy(b => active.filter(_.activeFor(m, b)))
-          .toSeq.sortBy(_._2.head)
-          .map { case (ds, bs) =>
-            val df = spark.read.schema(m.schema).parquet(
-              bs.map(b => resolveRel(dir, m.buckets(b))): _*)
-            ds.foldLeft(df) { (d, cd) =>
-              d.withColumn(cd.col,
-                expr(cd.litSql).cast(m.schema(cd.col).dataType))
-            }.select(m.schema.fieldNames.map(col).toSeq: _*)
-          }.reduce(_.unionByName(_))
-      }
+      if (groups.keys.forall(_.isEmpty)) scan(ids)
+      else groups.toSeq.sortBy(_._2.head).map { case (ds, bs) =>
+        ds.foldLeft(scan(bs)) { (d, cd) =>
+          d.withColumn(cd.col,
+            expr(cd.litSql).cast(m.schema(cd.col).dataType))
+        }.select(m.schema.fieldNames.map(col).toSeq: _*)
+      }.reduce(_.unionByName(_))
     val tombs = ids.flatMap(b => m.tombs.getOrElse(b, Seq.empty))
     if (tombs.isEmpty) base
     else {
@@ -1431,6 +1433,13 @@ object PartitionedUpsert {
       base.join(side, Seq(m.keyCol), "left_anti")
     }
   }
+
+  /** Every row of the pinned manifest `m` — what a read of a graft
+    * table by name or by `format("graft")` serves. */
+  private[graft] def readPinned(spark: SparkSession, dir: String,
+                                m: Manifest,
+                                bloomIndexDir: Option[String]): DataFrame =
+    bucketsDf(spark, dir, m, bloomIndexDir = bloomIndexDir)
 
   /** REPLACE the table's entire contents atomically — the lowering
     * INSERT OVERWRITE needs (r15 verdict #5: "re-init" was the stated
@@ -2262,10 +2271,18 @@ object PartitionedUpsert {
     // an all-ADDs batch never needs the data: evolve an empty frame of
     // the committed schema to get the new schema (plan-only, zero jobs)
     // and publish it over the unchanged bucket map — metadata-speed
+    // a column ADD creates holds NULLs (explicit NULL writes after the
+    // add) whatever its default, so the schema declares it nullable
+    val added = changes.collect { case Cdc.AddColumn(n, _, _)
+      if !prior.schema.fieldNames.exists(_.equalsIgnoreCase(n)) => n }
+    def nullableAdds(s: StructType): StructType = StructType(s.map(f =>
+      if (added.exists(_.equalsIgnoreCase(f.name))) f.copy(nullable = true)
+      else f))
     if (changes.forall(_.isInstanceOf[Cdc.AddColumn])) {
       val emptyPrior = spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], prior.schema)
-      val newSchema = Cdc.applySchemaChanges(emptyPrior, changes).schema
+      val newSchema =
+        nullableAdds(Cdc.applySchemaChanges(emptyPrior, changes).schema)
       if (newSchema.json == prior.schema.json) return // replayed adds: no-op
       // ADD COLUMN … DEFAULT (r18): still metadata-only — record the
       // default with the CURRENT bucket→path map (ColDefault's
@@ -2290,11 +2307,12 @@ object PartitionedUpsert {
       return
     }
     val evolved = Cdc.applySchemaChanges(read(spark, dir), changes)
+    val evolvedSchema = nullableAdds(evolved.schema)
     // replay no-op guard: a re-delivered DDL batch (rename already
     // applied, widen already at the target type) evolves to the
     // IDENTICAL schema — skip the O(table) rewrite and the manifest
     // version instead of paying both again on every replay
-    if (evolved.schema.json == prior.schema.json) return
+    if (evolvedSchema.json == prior.schema.json) return
     val staging = newStagingName(fs, dir)
     stageWriter(evolved
       .withColumn("bucket", routeExpr(prior.copy(keyCol = keyCol), col(keyCol))))
@@ -2322,10 +2340,10 @@ object PartitionedUpsert {
           else per.flatten.reduceOption((a: Long, b: Long) => math.max(a, b))
         _ => global
       }
-    val st = footerStats(spark, dir, staging, evolved.schema, keyCol,
+    val st = footerStats(spark, dir, staging, evolvedSchema, keyCol,
       StatCols(), carriedLsn)
     writeManifest(fs, dir, prior.copy(version = prior.version + 1,
-      schema = evolved.schema, keyCol = keyCol,
+      schema = evolvedSchema, keyCol = keyCol,
       buckets = st.rels, stats = st.stats,
       // the rewrite read through the tombstone filter, so deletes are
       // physical now; stale sidecars would also carry the PRE-rename

@@ -1,17 +1,14 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-import scala.util.Try
-
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.execution.streaming.{Sink => StreamSink}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{broadcast, coalesce, col, concat_ws, count, expr, lit, raise_error, when}
+import org.apache.spark.sql.functions.{coalesce, col, concat_ws, count, lit, raise_error, when}
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister, Filter, InsertableRelation, StreamSinkProvider, TableScan}
 import org.apache.spark.sql.streaming.OutputMode
@@ -30,37 +27,31 @@ import graft.ops.cdc.PartitionedUpsert.Manifest
   * over this provider persists in the metastore and works from any
   * Spark SQL client).
   *
-  * Architecture — three layers, each doing the one thing DSv2 asks:
+  * Architecture:
   *
-  *  1. [[GraftDataSource]] (TableProvider): resolves the manifest
-  *     (current or `versionAsOf`) ONCE per table load — a load is a
-  *     consistent SNAPSHOT, the same isolation contract every reader
-  *     here has (registerView pins at registration; this pins at
-  *     load/table-resolution).
-  *  2. [[GraftScanBuilder]]: receives Spark's column pruning and
-  *     filter pushdown. Filters do double duty: (a) MANIFEST-level
-  *     bucket pruning on the driver — point predicates on the table
-  *     key route through the same hash/range router writers use
-  *     (evaluated by a millisecond LocalTableScan job so the hash can
-  *     never drift from the engine's), and range predicates intersect
-  *     the per-bucket minKey/maxKey stats recorded at write time —
-  *     zero file listings, zero data reads to skip a bucket; (b) they
-  *     are re-planted inside the delegated scan for parquet
-  *     row-group/page skipping. All filters are ALSO returned as
-  *     residual so Spark re-evaluates them post-scan — double
-  *     evaluation is semantics-safe and keeps exotic predicate
-  *     semantics (NaN, collation) Spark's problem, not ours.
-  *  3. [[GraftScan]] (a public `V1Scan`): the actual reading is
-  *     DELEGATED to Spark's own vectorized parquet source over
-  *     exactly the pruned file set — the same plan
-  *     [[PartitionedUpsert.read]] produces, so scan performance is
-  *     identical to the native path (whole-stage codegen'd columnar
-  *     parquet), and this provider adds zero bespoke I/O code to
-  *     maintain. The V1 bridge costs one InternalRow⇄Row conversion
-  *     at the scan boundary — the honest price of full delegation;
-  *     at 100 TB the pruning (buckets via manifest, row groups via
-  *     pushed filters, columns via pruned schema) dominates that
-  *     linear conversion by orders of magnitude.
+  *  1. [[GraftDataSource]] (TableProvider) and [[GraftCatalog]]
+  *     resolve the manifest (current, `versionAsOf` or
+  *     `timestampAsOf`) ONCE per table load into a [[GraftTable]] — a
+  *     load is a consistent SNAPSHOT, the same isolation contract
+  *     every reader here has (registerView pins at registration; this
+  *     pins at load/table-resolution).
+  *  2. [[GraftReadRule]], a resolution rule [[graft.functions
+  *     .GraftExtensions]] injects, swaps every batch-read DSv2
+  *     relation over a [[GraftTable]] for the plan
+  *     [[PartitionedUpsert.readPinned]] builds for its pinned
+  *     manifest: Spark's own Parquet file scan over a
+  *     [[org.apache.spark.sql.graft.GraftFileIndex]], with the
+  *     table's default fill and tombstone anti-join above it — the
+  *     same plan every core reader (merge, CDF, time travel) gets. The
+  *     index prunes buckets by the filters Spark pushes into the scan
+  *     (key routing and ranges, column stats, bloom candidates) and
+  *     lists only the kept buckets; Spark reads the files columnar,
+  *     with row-group skipping and no row conversion. Write targets
+  *     stay DSv2 ([[GraftWriteBuilder]]).
+  *  3. [[GraftScanBuilder]] is the DSv2 scan left for sessions built
+  *     without the extension: a `V1Scan` serving the rows of that
+  *     same plan, unpruned (Spark filters them), and the streaming
+  *     refusal below.
   *
   * Registered via META-INF/services as format name `graft`.
   *
@@ -386,9 +377,9 @@ final class GraftCdfTable(dir: String, fromVersion: Long, toVersion: Long,
   * [[GraftWriteBuilder]]; a `versionAsOf` table is read-only
   * (inserting into a historical snapshot is never what the caller
   * meant). */
-final class GraftTable(val dir: String, manifest: Manifest,
+final class GraftTable(val dir: String, val manifest: Manifest,
                        writable: Boolean = true,
-                       bloomIndexDir: Option[String] = None)
+                       val bloomIndexDir: Option[String] = None)
     extends Table with SupportsRead with SupportsWrite {
 
   override def name(): String = s"graft.`$dir`@v${manifest.version}"
@@ -656,11 +647,11 @@ object GraftScanBuilder {
     *
     *  - POINT routing (`key = v` / `key IN (…)`): route each value
     *    through the table's own hash/range router. `route` is
-    *    injected so this stays pure — production passes the
-    *    LocalTableScan evaluation of [[PartitionedUpsert.bucketOf]] /
-    *    `rangeBucketOf`, guaranteeing bit-identical routing with the
-    *    write path (a re-implemented driver-side xxhash64 would be a
-    *    silent-wrong-pruning hazard).
+    *    injected so this stays pure — production passes the driver
+    *    evaluation of the table's own router expression
+    *    ([[org.apache.spark.sql.graft.GraftFileIndex]]), guaranteeing
+    *    bit-identical routing with the write path (a re-implemented
+    *    driver-side xxhash64 would be a silent-wrong-pruning hazard).
     *  - RANGE intersection (`key > / >= / < / <= v`): a bucket whose
     *    recorded [minKey, maxKey] cannot intersect the conjunct's
     *    bound is skipped. Stats are Optional — a bucket without them
@@ -852,10 +843,9 @@ object GraftScanBuilder {
     candidate.map(_.toSeq.sorted)
   }
 
-  /** sources.Filter → Column, for re-planting pushed filters inside
-    * the delegated parquet scan (row-group / page skipping). Only
-    * called for filters [[translatable]] accepted; the two must stay
-    * in sync, hence the shared single match. */
+  /** sources.Filter → Column: the condition of an overwrite by
+    * expression ([[GraftWriteBuilder]]) as a predicate over the
+    * table's rows; None for a filter with no column equivalent. */
   def toColumn(f: Filter): Option[org.apache.spark.sql.Column] = {
     def c(a: String) = col(s"`$a`")
     f match {
@@ -883,134 +873,32 @@ object GraftScanBuilder {
   }
 }
 
+/** The DSv2 scan of a [[GraftTable]], reached only in sessions built
+  * without [[graft.functions.GraftExtensions]] (with it,
+  * [[GraftReadRule]] replaces the relation before any scan is
+  * built): the rows of [[PartitionedUpsert.readPinned]]'s plan,
+  * column-pruned. Filters are not pushed — Spark applies them to the
+  * rows — so this face reads every bucket. */
 final class GraftScanBuilder(dir: String, manifest: Manifest,
                              bloomIndexDir: Option[String] = None)
-    extends ScanBuilder
-    with SupportsPushDownFilters
-    with SupportsPushDownRequiredColumns {
+    extends ScanBuilder with SupportsPushDownRequiredColumns {
 
   private var required: StructType = manifest.schema
-  private var pushed: Array[Filter] = Array.empty
-
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    pushed = filters.filter(f => GraftScanBuilder.toColumn(f).isDefined)
-    filters // everything is residual: Spark re-evaluates post-scan
-  }
-
-  override def pushedFilters(): Array[Filter] = pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Route key values through the table's OWN router expression on a
-    * one-row-per-value local frame — a millisecond LocalTableScan job
-    * at planning time (the readForKeys pattern), never a
-    * re-implementation of xxhash64. Any evaluation hiccup (e.g. a
-    * filter value whose type can't build the local frame) falls back
-    * to "no pruning" — pruning is only ever an optimization. */
-  private def routeViaEngine(values: Seq[Any]): Seq[Long] = {
-    val spark = SparkSession.active
-    val keyField = manifest.schema(manifest.keyCol)
-    val rows = values.map(Row(_)).asJava
-    val local = spark.createDataFrame(rows, StructType(Seq(keyField)))
-    val routed =
-      if (manifest.layout == PartitionedUpsert.LayoutRange)
-        PartitionedUpsert.rangeBucketOf(col(manifest.keyCol), manifest.splits)
-      else PartitionedUpsert.bucketOf(col(manifest.keyCol), manifest.nBuckets)
-    local.select(routed.as("b")).distinct().collect().map(_.getLong(0)).toSeq
-  }
-
-  /** SECONDARY-column bucket pruning via an existing [[graft.ops.cdc
-    * .BloomIndex]] sidecar (`option("bloomIndexDir", …)`): for each
-    * equality/IN conjunct, ask the index for candidate buckets —
-    * a filter on a column the index doesn't cover contributes
-    * nothing (the index validates its column and we discard the
-    * failure), and the whole step is skipped unless the CURRENT
-    * manifest still matches the scan's PINNED version (a rebucket
-    * committed after load would make index candidates and the pinned
-    * file layout disagree — the silent-row-loss race the version
-    * check closes; staleness WITHIN a version is the index's own
-    * conservative-keep contract). */
-  private def bloomKeep(): Option[Set[Long]] = bloomIndexDir.flatMap { idx =>
-    val spark = SparkSession.active
-    val current = Try(
-      PartitionedUpsert.manifestOrFail(spark, dir).version).toOption
-    if (!current.contains(manifest.version)) None
-    else {
-      val sets = pushed.toSeq.flatMap {
-        case sources.EqualTo(a, v) if v != null =>
-          Try(graft.ops.cdc.BloomIndex.candidateBuckets(
-            spark, dir, idx, a, Seq(v)).toSet).toOption
-        case sources.In(a, vs) if vs != null && vs.nonEmpty && !vs.contains(null) =>
-          Try(graft.ops.cdc.BloomIndex.candidateBuckets(
-            spark, dir, idx, a, vs.toSeq).toSet).toOption
-        case _ => None
-      }
-      sets.reduceOption(_ intersect _)
-    }
-  }
-
-  override def build(): Scan = {
-    val keep = Try(
-      GraftScanBuilder.pruneBuckets(manifest, pushed.toSeq, routeViaEngine)
-    ).toOption.flatten
-    val keyPruned = keep.getOrElse(manifest.buckets.keys.toSeq.sorted)
-    val buckets = bloomKeep() match {
-      case Some(cand) => keyPruned.filter(cand)
-      case None => keyPruned
-    }
-    val paths = buckets.flatMap(manifest.buckets.get).distinct.sorted
-      .map(rel => PartitionedUpsert.resolveRel(dir, rel))
-    // merge-on-read sidecars of the KEPT buckets ride into the scan:
-    // the DSv2 face must apply the same anti-join every core reader
-    // gets from bucketsDf, or a tombstoned row would leak through
-    // `spark.read.format("graft")` only. Only tombstoned tables grow
-    // the description suffix — untouched tables keep a byte-identical
-    // plan fingerprint.
-    val tombs = buckets.flatMap(b => manifest.tombs.getOrElse(b, Seq.empty))
-    // column DEFAULTs (r18): group the KEPT buckets by which active
-    // defaults apply; empty when none do, keeping the default-free
-    // single-read plan byte-identical
-    val activeDefaults = manifest.defaults.filter(_.pre.nonEmpty)
-    val defaultGroups: Seq[(Seq[(String, String)], Seq[String])] =
-      if (activeDefaults.isEmpty ||
-          !buckets.exists(b => activeDefaults.exists(_.activeFor(manifest, b))))
-        Seq.empty
-      else buckets.groupBy(b =>
-          activeDefaults.filter(_.activeFor(manifest, b)))
-        .toSeq.sortBy(_._2.head)
-        .map { case (ds, bs) =>
-          (ds.map(d => d.col -> d.litSql),
-            bs.flatMap(manifest.buckets.get).distinct.sorted
-              .map(rel => PartitionedUpsert.resolveRel(dir, rel)))
-        }
-    new GraftScan(paths, manifest.schema, required, pushed,
-      s"graft $dir v${manifest.version} " +
-        s"buckets=${buckets.size}/${manifest.buckets.size}" +
-        (if (tombs.isEmpty) "" else s" tombs=${tombs.size}") +
-        (if (defaultGroups.isEmpty) ""
-         else s" defaults=${activeDefaults.map(_.col).mkString(",")}"),
-      tombPaths = tombs.map(t => PartitionedUpsert.resolveRel(dir, t.rel)),
-      tombBytes = tombs.map(_.bytes).sum,
-      keyCol = manifest.keyCol,
-      defaultGroups = defaultGroups)
-  }
+  override def build(): Scan =
+    new GraftScan(dir, manifest, bloomIndexDir, required)
 }
 
-/** The pruned scan: file set fixed, columns pruned, filters pushed.
-  * `V1Scan` so the actual read delegates to Spark's vectorized
-  * parquet source (see [[GraftDataSource]] scaladoc for the trade). */
-final class GraftScan(paths: Seq[String], dataSchema: StructType,
-                      required: StructType, pushed: Array[Filter],
-                      desc: String,
-                      tombPaths: Seq[String] = Seq.empty,
-                      tombBytes: Long = 0L,
-                      keyCol: String = "",
-                      defaultGroups: Seq[(Seq[(String, String)],
-                        Seq[String])] = Seq.empty) extends V1Scan {
+/** [[GraftScanBuilder]]'s scan of the table's read plan. */
+final class GraftScan(dir: String, manifest: Manifest,
+                      bloomIndexDir: Option[String], required: StructType)
+    extends V1Scan {
 
   override def readSchema(): StructType = required
-  override def description(): String = desc
+  override def description(): String = s"graft $dir v${manifest.version}"
 
   /** The MICRO_BATCH_READ capability on [[GraftTable]] exists for the
     * CDF path — a PLAIN streaming read lands here and keeps the
@@ -1033,58 +921,10 @@ final class GraftScan(paths: Seq[String], dataSchema: StructType,
     val relation = new BaseRelation with TableScan {
       override val sqlContext: SQLContext = context
       override val schema: StructType = required
-      override def needConversion: Boolean = true
-      override def buildScan(): RDD[Row] = {
-        val spark = context.sparkSession
-        if (paths.isEmpty) {
-          // every bucket pruned away: an empty relation of the pruned
-          // schema (spark.read.parquet() with zero paths would throw)
-          spark.createDataFrame(
-            new java.util.ArrayList[Row](), required).rdd
-        } else {
-          // column DEFAULTs (r18): pre-add buckets read in their own
-          // group with the default filled for the whole column (their
-          // files physically lack it) — and the fill happens BEFORE
-          // the re-planted filters, or a predicate on the defaulted
-          // column would evaluate against NULL and silently drop the
-          // rows the default belongs to
-          val base =
-            if (defaultGroups.isEmpty)
-              spark.read.schema(dataSchema).parquet(paths: _*)
-            else defaultGroups.map { case (ds, ps) =>
-              val df = spark.read.schema(dataSchema).parquet(ps: _*)
-              ds.foldLeft(df) { case (d, (c, litSql)) =>
-                d.withColumn(c, expr(litSql).cast(dataSchema(c).dataType))
-              }.select(dataSchema.fieldNames.map(n => col(s"`$n`")).toSeq: _*)
-            }.reduce(_.unionByName(_))
-          val filtered = pushed.flatMap(GraftScanBuilder.toColumn)
-            .foldLeft(base)((d, f) => d.where(f))
-          // merge-on-read: anti-join the tombstoned keys away BEFORE
-          // the projection (the key column need not survive column
-          // pruning — the full-schema base read still carries it).
-          // Broadcast under the same footprint rule as the core read
-          // path; the bytes rode in from the manifest, zero FS calls.
-          val live =
-            if (tombPaths.isEmpty) filtered
-            else {
-              val keySchema = StructType(Seq(dataSchema(keyCol)))
-              val keys = spark.read.schema(keySchema).parquet(tombPaths: _*)
-              val side =
-                if (tombBytes <= PartitionedUpsert.TombBroadcastBytes)
-                  broadcast(keys)
-                else keys
-              filtered.join(side, Seq(keyCol), "left_anti")
-            }
-          val projected =
-            if (required.isEmpty)
-              // COUNT(*)-style scan: no columns survive pruning; keep
-              // row multiplicity with a zero-width projection
-              live.select()
-            else
-              live.select(required.fieldNames.map(n => col(s"`$n`")).toSeq: _*)
-          projected.rdd
-        }
-      }
+      override def buildScan(): RDD[Row] =
+        PartitionedUpsert.readPinned(context.sparkSession, dir, manifest,
+          bloomIndexDir)
+          .select(required.fieldNames.map(n => col(s"`$n`")).toSeq: _*).rdd
     }
     relation.asInstanceOf[T]
   }

@@ -11,11 +11,12 @@ import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Streaming write BY CATALOG NAME (r18) — the second and last
-  * `private[sql]` bridge this library uses, in the same package-under-
-  * `org.apache.spark.sql` pattern as [[SinkBridge]] (the Delta-package
-  * precedent; Delta's `DeltaTableV2` extends this exact trait for the
-  * same reason).
+/** Streaming write BY CATALOG NAME (r18) — one of the three
+  * `private[sql]` bridges this library uses (with [[SinkBridge]] and
+  * [[GraftFileIndex]]), in the same package-under-
+  * `org.apache.spark.sql` pattern (the Delta-package precedent;
+  * Delta's `DeltaTableV2` extends this exact trait for the same
+  * reason).
   *
   * WHY: `df.writeStream.format("graft").toTable("g.ns.t")` resolves
   * the identifier through the table catalog and then needs ONE of
@@ -34,7 +35,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * they cannot drift.
   *
   * The wrapper delegates every batch face to the inner table
-  * unchanged (name/schema/capabilities/scan/write), so batch SQL,
+  * unchanged (name/schema/capabilities/scan/write), and
+  * [[graft.sources.GraftReadRule]] reads through it to the inner
+  * table's pinned manifest, so batch SQL,
   * time travel, DML-grammar resolution (which reads the rendered
   * Name) and the `readStream.table` refusal pointer all behave
   * exactly as before; only `DataStreamWriter.toTable`'s
@@ -47,7 +50,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * auto-create path cannot declare a key, and the catalog refuses
   * keyless creates loudly. */
 final class GraftNamedTable(
-    delegate: Table with SupportsRead with SupportsWrite,
+    val delegate: Table with SupportsRead with SupportsWrite,
     catalogName: String,
     namespace: Seq[String],
     tableName: String,

@@ -4,7 +4,8 @@ import org.apache.spark.sql.classic
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
 
-/** The ONE `private[sql]` bridge this library uses, isolated in its
+/** The first `private[sql]` bridge this library uses (the others are
+  * [[GraftNamedTable]] and [[GraftFileIndex]]), isolated in its
   * own package object under `org.apache.spark.sql` — the public
   * pattern every production Spark sink that needs it follows (Delta
   * Lake's whole codebase lives in `org.apache.spark.sql.delta` for

@@ -52,11 +52,9 @@ class VectorExpressionsSpec extends SparkSpec {
   }
 
   test("extensions-injected session resolves graft_dot without manual registration") {
-    val s2 = org.apache.spark.sql.SparkSession.builder()
+    val s2 = graft.GraftSession.builder(2)
       .master("local[2]")
       .appName("graft-ext-test")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
       // getOrCreate may return the shared session; force a new one with

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
 
 import graft.SparkSpec
-import graft.sources.GraftScanBuilder
 
 /** `ANALYZE TABLE … COMPUTE STATISTICS FOR COLUMNS` — declaring
   * per-bucket skipping stats with ONE agg scan and a metadata-only
@@ -16,17 +15,9 @@ import graft.sources.GraftScanBuilder
   * optional, Spark-only ANALYZE variants left to the delegate). */
 class AnalyzeSpec extends SparkSpec {
 
+  // buckets kept by the file scan a filtered read executes
   private def keptBuckets(dir: String, filters: sources.Filter*)
-      : (Int, Int) = {
-    val sb = new GraftScanBuilder(dir,
-      PartitionedUpsert.manifestOrFail(spark, dir))
-    sb.pushFilters(filters.toArray): Unit
-    val re = """buckets=(\d+)/(\d+)""".r
-    val desc = sb.build().description()
-    re.findFirstMatchIn(desc)
-      .map(x => (x.group(1).toInt, x.group(2).toInt))
-      .getOrElse(fail(s"no buckets=k/n marker in: $desc"))
-  }
+      : (Int, Int) = graft.GraftScans.keptBuckets(spark, dir, filters: _*)
 
   test("analyzeColumns records every applicable face per column off " +
       "the LOGICAL state, metadata-only (no data movement, one " +

@@ -69,21 +69,10 @@ class ColStatsSpec extends SparkSpec {
     val m = PartitionedUpsert.manifestOrFail(spark, dir)
     assert(m.colStats.nonEmpty, "zorder must record the ranges")
     assert(m.colStats.values.forall(_.contains("v")))
-    // the scan advertises its bucket pruning in its description
-    // (buckets=<kept>/<total>): drive the ScanBuilder exactly as
-    // Spark's pushdown does (the V1Scan-delegated physical plan
-    // renders an anonymous relation, so the description is read from
-    // the built Scan itself)
-    def keptBuckets(filters: sources.Filter*): (Int, Int) = {
-      val sb = new GraftScanBuilder(dir,
-        PartitionedUpsert.manifestOrFail(spark, dir))
-      sb.pushFilters(filters.toArray): Unit
-      val re = """buckets=(\d+)/(\d+)""".r
-      val desc = sb.build().description()
-      re.findFirstMatchIn(desc)
-        .map(x => (x.group(1).toInt, x.group(2).toInt))
-        .getOrElse(fail(s"no buckets=k/n marker in: $desc"))
-    }
+    // the executed file scan's index reports its bucket pruning as
+    // buckets=<kept>/<total> for the scan's own data filters
+    def keptBuckets(filters: sources.Filter*): (Int, Int) =
+      graft.GraftScans.keptBuckets(spark, dir, filters: _*)
     assert(keptBuckets() == (4, 4))
     val (kept, total) = keptBuckets(sources.LessThanOrEqual("v", 200L))
     assert(kept < total, s"expected fewer than $total buckets, got $kept")
@@ -130,11 +119,9 @@ class ColStatsSpec extends SparkSpec {
     val got = spark.read.format("graft").load(dir).filter($"v" <= 5L)
       .select("k", "v").collect().map(r => (r.getLong(0), r.getLong(1)))
     assert(got.toSeq == Seq((99L, 5L)))
-    val sb = new GraftScanBuilder(dir, m)
-    sb.pushFilters(Array[sources.Filter](sources.LessThan("v", 5L))): Unit
-    val desc = sb.build().description()
-    assert("""buckets=(\d+)/4""".r.findFirstMatchIn(desc)
-      .exists(_.group(1).toInt == 0),
+    val desc = graft.GraftScans.keptBuckets(spark, dir,
+      sources.LessThan("v", 5L))
+    assert(desc._2 == 4 && desc._1 == 0,
       s"fresh ranges must prune v<5 to zero buckets: $desc")
     // COMPACTION also re-records (r18): a WIDE merge into the top
     // bucket (keys above the last range split all route there)
@@ -224,14 +211,9 @@ class ColStatsSpec extends SparkSpec {
     PartitionedUpsert.optimizeZorder(spark, dir, Seq("d")): Unit
     val m = PartitionedUpsert.manifestOrFail(spark, dir)
     assert(m.colStats.nonEmpty && m.colStats.values.forall(_.contains("d")))
-    val sb = new GraftScanBuilder(dir, m)
-    sb.pushFilters(Array[sources.Filter](sources.LessThanOrEqual("d",
-      java.sql.Date.valueOf("2024-01-20")))): Unit
-    val desc = sb.build().description()
-    val kept = """buckets=(\d+)/(\d+)""".r.findFirstMatchIn(desc)
-      .map(x => (x.group(1).toInt, x.group(2).toInt))
-      .getOrElse(fail(s"no buckets marker in $desc"))
-    assert(kept._1 < kept._2, s"date range must prune: $desc")
+    val kept = graft.GraftScans.keptBuckets(spark, dir,
+      sources.LessThanOrEqual("d", java.sql.Date.valueOf("2024-01-20")))
+    assert(kept._1 < kept._2, s"date range must prune: $kept")
     val got = spark.read.format("graft").load(dir)
       .filter($"d" <= lit(java.sql.Date.valueOf("2024-01-20")))
       .select("k").collect().map(_.getLong(0)).toSet
@@ -260,14 +242,9 @@ class ColStatsSpec extends SparkSpec {
       "k", "__lsn", "__op", Seq("amt"), 4): Unit
     val m = PartitionedUpsert.manifestOrFail(spark, dir)
     assert(m.colStats.values.forall(_.contains("amt")))
-    val sb = new GraftScanBuilder(dir, m)
-    sb.pushFilters(Array[sources.Filter](sources.LessThan("amt",
-      new java.math.BigDecimal("1.00")))): Unit
-    val desc = sb.build().description()
-    val kept = """buckets=(\d+)/(\d+)""".r.findFirstMatchIn(desc)
-      .map(x => (x.group(1).toInt, x.group(2).toInt))
-      .getOrElse(fail(s"no buckets marker in $desc"))
-    assert(kept == ((1, 4)), s"only the merged bucket holds amt<1: $desc")
+    val kept = graft.GraftScans.keptBuckets(spark, dir,
+      sources.LessThan("amt", new java.math.BigDecimal("1.00")))
+    assert(kept == ((1, 4)), s"only the merged bucket holds amt<1: $kept")
     val got = spark.read.format("graft").load(dir)
       .filter($"amt" < lit(new java.math.BigDecimal("1.00")))
       .select("k").collect().map(_.getLong(0)).toSeq

@@ -50,9 +50,10 @@ class GraftTableProviderSpec extends SparkSpec {
     // non-key filter contributes nothing
     assert(GraftScanBuilder.pruneBuckets(m,
       Seq(sources.EqualTo("tag", "x")), _ => fail("must not route")) === None)
-    // end to end: a point lookup plans a scan over fewer buckets
+    // end to end: a point lookup plans a scan over one bucket
     val df = spark.read.format("graft").load(dir).filter(col("k") === 7L)
     assert(df.count() === 1)
+    assert(graft.GraftScans.keptBuckets(df) === ((1, 8)))
   }
 
   test("range predicates intersect the manifest's per-bucket key stats") {
@@ -137,6 +138,10 @@ class GraftTableProviderSpec extends SparkSpec {
       .filter(col("tag") === "row7")
     assert(bloomed.collect().map(_.toString).toSeq === plain)
     assert(plain.length === 1)
+    // the sidecar's candidates prune the executed scan's buckets
+    assert(graft.GraftScans.keptBuckets(spark.read.format("graft").load(dir)
+      .filter(col("tag") === "row7")) === ((16, 16)))
+    assert(graft.GraftScans.keptBuckets(bloomed)._1 < 16)
     // a filter on a column the index does NOT cover: no pruning, same
     // results (the Try-discard path)
     val other = spark.read.format("graft")

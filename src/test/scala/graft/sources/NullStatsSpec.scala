@@ -71,16 +71,8 @@ class NullStatsSpec extends SparkSpec {
     val totals = m.nullStats.values.flatMap(_.get("v")).toSeq
     assert(totals.map(_._2).sum == 100L, s"rows must sum: $totals")
     assert(totals.map(_._1).sum == 25L, s"nulls must sum: $totals")
-    def keptBuckets(filters: sources.Filter*): (Int, Int) = {
-      val sb = new GraftScanBuilder(dir,
-        PartitionedUpsert.manifestOrFail(spark, dir))
-      sb.pushFilters(filters.toArray): Unit
-      val re = """buckets=(\d+)/(\d+)""".r
-      val desc = sb.build().description()
-      re.findFirstMatchIn(desc)
-        .map(x => (x.group(1).toInt, x.group(2).toInt))
-        .getOrElse(fail(s"no buckets=k/n marker in: $desc"))
-    }
+    def keptBuckets(filters: sources.Filter*): (Int, Int) =
+      graft.GraftScans.keptBuckets(spark, dir, filters: _*)
     val (kept, total) = keptBuckets(sources.IsNull("v"))
     assert(kept < total, s"IsNull must prune no-null buckets: $kept/$total")
     val got = spark.read.format("graft").load(dir).filter($"v".isNull)

@@ -149,16 +149,8 @@ class StrStatsSpec extends SparkSpec {
     val m = PartitionedUpsert.manifestOrFail(spark, dir)
     assert(m.strStats.nonEmpty && m.strStats.values.forall(_.contains("s")),
       s"zorder must record string bounds, got ${m.strStats}")
-    def keptBuckets(filters: sources.Filter*): (Int, Int) = {
-      val sb = new GraftScanBuilder(dir,
-        PartitionedUpsert.manifestOrFail(spark, dir))
-      sb.pushFilters(filters.toArray): Unit
-      val re = """buckets=(\d+)/(\d+)""".r
-      val desc = sb.build().description()
-      re.findFirstMatchIn(desc)
-        .map(x => (x.group(1).toInt, x.group(2).toInt))
-        .getOrElse(fail(s"no buckets=k/n marker in: $desc"))
-    }
+    def keptBuckets(filters: sources.Filter*): (Int, Int) =
+      graft.GraftScans.keptBuckets(spark, dir, filters: _*)
     assert(keptBuckets() == ((4, 4)))
     val (kept, total) = keptBuckets(sources.EqualTo("s", "berlin"))
     assert(kept < total, s"expected fewer than $total buckets, got $kept")
