@@ -16,7 +16,8 @@ import org.apache.spark.sql.SparkSession
   * - the graft extensions: native functions (graft_dot,
   *   graft_normalize_text, graft_char_shingles, …), the statement
   *   parser, and the rule that reads graft tables through Spark's own
-  *   Parquet file scan (a session without it reads them unpruned)
+  *   Parquet file scan (a session without it gets the DSv2 scan, which
+  *   serves the same plan's rows converted back)
   * - a generated-class cache of [[CodegenCacheEntries]] (see there)
   *
   * Deliberately NOT set: `spark.sql.parquet.aggregatePushdown` — it

@@ -1402,10 +1402,13 @@ object PartitionedUpsert {
     * row. A deleted key can only live in the bucket it routes to, so
     * the union of the SELECTED buckets' sidecars is exact for any
     * bucket subset; the sidecar footprint rides in the manifest, so
-    * the broadcast decision costs zero FS calls. */
-  private def bucketsDf(spark: SparkSession, dir: String, m: Manifest,
-                        only: Option[Seq[Long]] = None,
-                        bloomIndexDir: Option[String] = None): DataFrame = {
+    * the broadcast decision costs zero FS calls. Every branch returns
+    * the manifest schema's columns in its order. */
+  private[graft] def bucketsDf(spark: SparkSession, dir: String,
+                               m: Manifest,
+                               only: Option[Seq[Long]] = None,
+                               bloomIndexDir: Option[String] = None)
+      : DataFrame = {
     val ids = only.getOrElse(m.buckets.keys.toSeq)
       .filter(m.buckets.contains).distinct.sorted
     def scan(bs: Seq[Long]): DataFrame =
@@ -1430,16 +1433,13 @@ object PartitionedUpsert {
       val side =
         if (tombs.map(_.bytes).sum <= TombBroadcastBytes) broadcast(keys)
         else keys
+      // a USING join lists its key first: restore the manifest's
+      // column order, which readers that match columns by position
+      // (the read rule, `INSERT INTO t SELECT *`) rely on
       base.join(side, Seq(m.keyCol), "left_anti")
+        .select(m.schema.fieldNames.map(n => col(s"`$n`")).toSeq: _*)
     }
   }
-
-  /** Every row of the pinned manifest `m` — what a read of a graft
-    * table by name or by `format("graft")` serves. */
-  private[graft] def readPinned(spark: SparkSession, dir: String,
-                                m: Manifest,
-                                bloomIndexDir: Option[String]): DataFrame =
-    bucketsDf(spark, dir, m, bloomIndexDir = bloomIndexDir)
 
   /** REPLACE the table's entire contents atomically — the lowering
     * INSERT OVERWRITE needs (r15 verdict #5: "re-init" was the stated

@@ -18,7 +18,7 @@ import graft.ops.cdc.PartitionedUpsert
   * this resolution rule ([[graft.functions.GraftExtensions]] injects
   * it) replaces each batch-read `DataSourceV2Relation` over a
   * [[GraftTable]] — or a [[GraftNamedTable]] wrapping one — with
-  * [[PartitionedUpsert.readPinned]]'s plan for the table's pinned
+  * [[PartitionedUpsert.bucketsDf]]'s plan for the table's pinned
   * manifest, re-aliased to the relation's output attributes (ids,
   * names and metadata kept), so the rest of the query resolves as if
   * nothing changed. Delta Lake swaps its V2 table for a V1 relation
@@ -35,8 +35,8 @@ final class GraftReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
     val out = plan.resolveOperatorsDown {
       case r: DataSourceV2Relation if !r.isStreaming =>
         GraftReadRule.graftTable(r.table).map { t =>
-          val pinned = PartitionedUpsert.readPinned(spark, t.dir, t.manifest,
-            t.bloomIndexDir).queryExecution.analyzed
+          val pinned = PartitionedUpsert.bucketsDf(spark, t.dir, t.manifest,
+            bloomIndexDir = t.bloomIndexDir).queryExecution.analyzed
           // a read by name names its table on each file relation:
           // `Catalog.refreshTable` (which a stream writing by name runs
           // after every batch) walks the plan down to the relations it
@@ -55,6 +55,7 @@ final class GraftReadRule(spark: SparkSession) extends Rule[LogicalPlan] {
             }
           }
           // both sides list the manifest schema's columns in order
+          // (`bucketsDf` keeps that order on every branch)
           Project(r.output.zip(read.output).map { case (a, src) =>
             Alias(src, a.name)(exprId = a.exprId, qualifier = a.qualifier,
               explicitMetadata = Some(a.metadata))

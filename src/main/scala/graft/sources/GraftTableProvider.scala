@@ -4,7 +4,7 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SparkSession}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownRequiredColumns, V1Scan}
+import org.apache.spark.sql.connector.read.{Scan, ScanBuilder, SupportsPushDownFilters, SupportsPushDownRequiredColumns, V1Scan}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, V1Write, Write, WriteBuilder}
 import org.apache.spark.sql.execution.streaming.{Sink => StreamSink}
 import org.apache.spark.sql.expressions.Window
@@ -38,7 +38,7 @@ import graft.ops.cdc.PartitionedUpsert.Manifest
   *  2. [[GraftReadRule]], a resolution rule [[graft.functions
   *     .GraftExtensions]] injects, swaps every batch-read DSv2
   *     relation over a [[GraftTable]] for the plan
-  *     [[PartitionedUpsert.readPinned]] builds for its pinned
+  *     [[PartitionedUpsert.bucketsDf]] builds for its pinned
   *     manifest: Spark's own Parquet file scan over a
   *     [[org.apache.spark.sql.graft.GraftFileIndex]], with the
   *     table's default fill and tombstone anti-join above it — the
@@ -50,8 +50,9 @@ import graft.ops.cdc.PartitionedUpsert.Manifest
   *     stay DSv2 ([[GraftWriteBuilder]]).
   *  3. [[GraftScanBuilder]] is the DSv2 scan left for sessions built
   *     without the extension: a `V1Scan` serving the rows of that
-  *     same plan, unpruned (Spark filters them), and the streaming
-  *     refusal below.
+  *     same plan with the pushed filters placed on it (so the index
+  *     still prunes; Spark re-evaluates them on the rows), and the
+  *     streaming refusal below.
   *
   * Registered via META-INF/services as format name `graft`.
   *
@@ -876,25 +877,40 @@ object GraftScanBuilder {
 /** The DSv2 scan of a [[GraftTable]], reached only in sessions built
   * without [[graft.functions.GraftExtensions]] (with it,
   * [[GraftReadRule]] replaces the relation before any scan is
-  * built): the rows of [[PartitionedUpsert.readPinned]]'s plan,
-  * column-pruned. Filters are not pushed — Spark applies them to the
-  * rows — so this face reads every bucket. */
+  * built): the rows of [[PartitionedUpsert.bucketsDf]]'s plan,
+  * column-pruned, with every pushed filter that has a column form
+  * placed on that plan, where the file index prunes buckets by it.
+  * Every filter stays residual: Spark re-evaluates them on the rows. */
 final class GraftScanBuilder(dir: String, manifest: Manifest,
                              bloomIndexDir: Option[String] = None)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
+    extends ScanBuilder
+    with SupportsPushDownFilters
+    with SupportsPushDownRequiredColumns {
 
   private var required: StructType = manifest.schema
+  private var pushed: Array[Filter] = Array.empty
+
+  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
+    // top-level columns only: a nested reference arrives dotted
+    pushed = filters.filter(f =>
+      f.references.forall(manifest.schema.fieldNames.contains) &&
+        GraftScanBuilder.toColumn(f).isDefined)
+    filters
+  }
+
+  override def pushedFilters(): Array[Filter] = pushed
 
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
   override def build(): Scan =
-    new GraftScan(dir, manifest, bloomIndexDir, required)
+    new GraftScan(dir, manifest, bloomIndexDir, required, pushed.toSeq)
 }
 
 /** [[GraftScanBuilder]]'s scan of the table's read plan. */
 final class GraftScan(dir: String, manifest: Manifest,
-                      bloomIndexDir: Option[String], required: StructType)
+                      bloomIndexDir: Option[String], required: StructType,
+                      pushed: Seq[Filter])
     extends V1Scan {
 
   override def readSchema(): StructType = required
@@ -922,8 +938,9 @@ final class GraftScan(dir: String, manifest: Manifest,
       override val sqlContext: SQLContext = context
       override val schema: StructType = required
       override def buildScan(): RDD[Row] =
-        PartitionedUpsert.readPinned(context.sparkSession, dir, manifest,
-          bloomIndexDir)
+        pushed.flatMap(GraftScanBuilder.toColumn).foldLeft(
+          PartitionedUpsert.bucketsDf(context.sparkSession, dir, manifest,
+            bloomIndexDir = bloomIndexDir))(_ where _)
           .select(required.fieldNames.map(n => col(s"`$n`")).toSeq: _*).rdd
     }
     relation.asInstanceOf[T]

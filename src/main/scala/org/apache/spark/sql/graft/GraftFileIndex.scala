@@ -99,7 +99,7 @@ final class GraftFileIndex(spark: SparkSession, dir: String,
     }
 
   /** The buckets a scan with these data filters reads. */
-  def keptBuckets(dataFilters: Seq[Expression]): Seq[Long] = {
+  private def keptBuckets(dataFilters: Seq[Expression]): Seq[Long] = {
     val filters = dataFilters.flatMap(
       DataSourceStrategy.translateFilter(_, supportNestedPredicatePushdown = false))
     val pruned = Try(GraftScanBuilder.pruneBuckets(manifest, filters, route))

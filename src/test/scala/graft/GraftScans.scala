@@ -9,8 +9,8 @@ import org.apache.spark.sql.sources
 import graft.sources.GraftScanBuilder
 
 /** Reads a query's bucket pruning off the plan Spark executed: the
-  * file scans over a [[GraftFileIndex]] and the buckets each keeps for
-  * its own data filters. */
+  * file scans over a [[GraftFileIndex]] and the bucket directories
+  * whose files each of them listed. */
 object GraftScans extends AdaptiveSparkPlanHelper {
 
   /** The graft file scans of an executed plan, AQE stages included. */
@@ -20,15 +20,21 @@ object GraftScans extends AdaptiveSparkPlanHelper {
         (s, s.relation.location.asInstanceOf[GraftFileIndex])
     }
 
-  /** Runs `df` and returns (kept buckets, table buckets) over its graft
-    * scans, each scan's kept buckets judged by its own data filters. */
+  /** Runs `df` and returns (buckets read, table buckets) over its
+    * graft scans: a bucket counts as read when the executed scan's
+    * file listing holds a file of its directory. */
   def keptBuckets(df: DataFrame): (Int, Int) = {
     df.collect(): Unit
     val scans = graftScans(df.queryExecution.executedPlan)
     require(scans.nonEmpty,
       s"no graft file scan in:\n${df.queryExecution.executedPlan}")
-    (scans.map { case (s, idx) => idx.keptBuckets(s.dataFilters).size }.sum,
-      scans.head._2.manifest.buckets.size)
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
+    (scans.map { case (s, idx) =>
+      val bucketDirs =
+        idx.rootPaths.map(p => p.getFileSystem(conf).makeQualified(p)).toSet
+      s.selectedPartitions.toPartitionArray.map(_.toPath.getParent)
+        .filter(bucketDirs).distinct.length
+    }.sum, scans.head._2.manifest.buckets.size)
   }
 
   /** [[keptBuckets]] of `format("graft").load(dir)` under `filters`. */

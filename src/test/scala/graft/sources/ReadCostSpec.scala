@@ -7,7 +7,10 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListe
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.connector.read.V1Scan
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.sources
+import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 
 import graft.{GraftScans, SparkSpec}
 import graft.ops.cdc.PartitionedUpsert
@@ -16,7 +19,8 @@ import graft.ops.cdc.PartitionedUpsert
   * SELECT plans one Parquet file scan over the key's bucket and runs
   * as one SQL execution of one job with one task — no nested query
   * plans the routing, no job evaluates it. A point DELETE reads only
-  * the key's bucket, because its statement read prunes too. */
+  * the key's bucket, because its statement read prunes too. So does
+  * the DSv2 scan a session built without the extension gets. */
 class ReadCostSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val Table = "read_cost_t"
@@ -78,8 +82,7 @@ class ReadCostSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       // from that bucket (each of the few plans reads it once)
       val bucketRows = spark.table(Table)
         .where(PartitionedUpsert.bucketOf(col("k"), Buckets) ===
-          PartitionedUpsert.bucketOf(org.apache.spark.sql.functions.lit(7L),
-            Buckets)).count()
+          PartitionedUpsert.bucketOf(lit(7L), Buckets)).count()
       val (_, _, _, _, read) = measured(
         spark.sql(s"DELETE FROM $Table WHERE k = 7").collect())
       assert(read > 0 && read <= 4 * bucketRows,
@@ -87,5 +90,28 @@ class ReadCostSpec extends SparkSpec with AdaptiveSparkPlanHelper {
       assert(spark.table(Table).where($"k" === 7L).count() == 0)
       assert(spark.table(Table).count() == rows - 1)
     } finally spark.sql(s"DROP TABLE IF EXISTS $Table")
+  }
+
+  test("without the extension, the DSv2 scan reads only the bucket its " +
+      "pushed key filter routes to") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_read_cost_v1")
+      .toString + "/t"
+    PartitionedUpsert.init((1L to 1600L).map(k => (k, k * 10L, s"r$k"))
+      .toDF("k", "v", "tag").coalesce(1), dir, "k", Buckets)
+    val builder = new GraftScanBuilder(dir,
+      PartitionedUpsert.manifestOrFail(spark, dir))
+    val filters: Array[sources.Filter] = Array(sources.EqualTo("k", 42L))
+    // every filter stays residual: Spark re-evaluates them on the rows
+    assert(builder.pushFilters(filters).toSeq == filters.toSeq)
+    val relation = builder.build().asInstanceOf[V1Scan]
+      .toV1TableScan[BaseRelation with TableScan](spark.sqlContext)
+    val (rows, _, _, _, read) = measured(relation.buildScan().collect())
+    assert(rows.map(_.getLong(0)).toSeq == Seq(42L))
+    val bucketRows = PartitionedUpsert.read(spark, dir)
+      .where(PartitionedUpsert.bucketOf(col("k"), Buckets) ===
+        PartitionedUpsert.bucketOf(lit(42L), Buckets)).count()
+    assert(read > 0 && read <= bucketRows,
+      s"the scan read $read records; the key's bucket holds $bucketRows")
   }
 }

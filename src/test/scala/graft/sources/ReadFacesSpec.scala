@@ -20,7 +20,9 @@ import graft.ops.cdc.{BloomIndex, Cdc, PartitionedUpsert}
   * equality, IN, key-range and secondary-column predicates. Each result
   * must equal `PartitionedUpsert.read`, which must equal the model,
   * filtered in memory. Finally `INSERT INTO t SELECT * FROM t` must
-  * leave the rows unchanged. */
+  * leave the rows unchanged. The hash table lists its key second, so a
+  * face that pairs columns by position rather than by name (a USING
+  * anti-join lists its key first) reads values under the wrong names. */
 class ReadFacesSpec extends SparkSpec {
   import ReadFacesSpec._
 
@@ -40,7 +42,7 @@ class ReadFacesSpec extends SparkSpec {
     t <- tier
   } yield Rec(k, v, s, t)
 
-  private def genScenario(layout: String): Gen[Scenario] = for {
+  private def genScenario(layout: String, keyFirst: Boolean): Gen[Scenario] = for {
     n <- Gen.oneOf(6, 8)
     rows <- Gen.chooseNum(60, 100)
     init <- Gen.sequence[List[Rec], Rec](
@@ -57,28 +59,32 @@ class ReadFacesSpec extends SparkSpec {
         Gen.frequency((3, Gen.chooseNum(0L, 9L).map(Some(_))),
           (1, Gen.const(None))))))
     mor <- Gen.pick(6, (1L to rows + 11L).filterNot(d1.toSet))
-  } yield Scenario(layout, n, init, b1, d1.toSeq, b2, mor.toSeq)
+  } yield Scenario(layout, keyFirst, n, init, b1, d1.toSeq, b2, mor.toSeq)
 
-  private def schema(withTier: Boolean): StructType = StructType(
-    Seq(StructField("k", LongType), StructField("v", LongType),
-      StructField("s", StringType)) ++
+  private def schema(sc: Scenario, withTier: Boolean): StructType = {
+    val (k, v) = (StructField("k", LongType), StructField("v", LongType))
+    StructType((if (sc.keyFirst) Seq(k, v) else Seq(v, k)) ++
+      Seq(StructField("s", StringType)) ++
       (if (withTier) Seq(StructField("tier", LongType)) else Nil))
+  }
 
   private def frame(rows: Seq[Row], st: StructType): DataFrame =
     spark.createDataFrame(rows.asJava, st)
 
-  private def row(r: Rec, withTier: Boolean): Seq[Any] =
-    Seq(r.k, r.v, r.s) ++ (if (withTier) Seq(r.tier.map(Long.box).orNull) else Nil)
+  private def row(sc: Scenario, r: Rec, withTier: Boolean): Seq[Any] =
+    (if (sc.keyFirst) Seq(r.k, r.v) else Seq(r.v, r.k)) ++ Seq(r.s) ++
+      (if (withTier) Seq(r.tier.map(Long.box).orNull) else Nil)
 
   private def merge(dir: String, sc: Scenario, ups: Seq[Rec], dels: Seq[Long],
                     lsn: Long, withTier: Boolean): Unit = {
+    val cols = schema(sc, withTier)
     val st = StructType(StructField("__op", StringType) +:
-      StructField("__lsn", LongType) +: schema(withTier).fields.toSeq)
-    val rows = ups.map(r => Row.fromSeq(Seq("u", lsn) ++ row(r, withTier))) ++
-      dels.map(k => Row.fromSeq(Seq("d", lsn, k) ++
-        Seq.fill(st.size - 3)(null)))
+      StructField("__lsn", LongType) +: cols.fields.toSeq)
+    val rows = ups.map(r => Row.fromSeq(Seq("u", lsn) ++ row(sc, r, withTier))) ++
+      dels.map(k => Row.fromSeq(Seq("d", lsn) ++
+        cols.fieldNames.toSeq.map(c => if (c == "k") k else null)))
     PartitionedUpsert.merge(spark, dir, frame(rows, st), "k", "__lsn", "__op",
-      schema(withTier).fieldNames.toSeq.tail, sc.n): Unit
+      cols.fieldNames.toSeq.filterNot(_ == "k"), sc.n): Unit
   }
 
   private def recsOf(df: DataFrame): Set[Rec] = {
@@ -128,8 +134,8 @@ class ReadFacesSpec extends SparkSpec {
     val dir = s"$wh/faces/$name"
     var model: Map[Long, Rec] = sc.init.map(r => r.k -> r).toMap
     // several input partitions: each bucket starts with several files
-    PartitionedUpsert.init(frame(sc.init.map(r => Row.fromSeq(row(r, false))),
-      schema(false)).repartition(3), dir, "k", sc.n, layout = sc.layout)
+    PartitionedUpsert.init(frame(sc.init.map(r => Row.fromSeq(row(sc, r, false))),
+      schema(sc, false)).repartition(3), dir, "k", sc.n, layout = sc.layout)
     merge(dir, sc, sc.b1, sc.d1, 1L, withTier = false)
     model = model -- sc.d1 ++ sc.b1.map(r => r.k -> r)
     PartitionedUpsert.compactFiles(spark, dir, maxFilesPerBucket = 1): Unit
@@ -182,12 +188,13 @@ class ReadFacesSpec extends SparkSpec {
   private val params = SCTest.Parameters.default
     .withMinSuccessfulTests(1).withWorkers(1)
 
-  Seq(PartitionedUpsert.LayoutHash, PartitionedUpsert.LayoutRange)
-    .foreach { layout =>
-      test(s"every read face equals the model ($layout layout)") {
+  Seq(PartitionedUpsert.LayoutHash -> false, PartitionedUpsert.LayoutRange -> true)
+    .foreach { case (layout, keyFirst) =>
+      val order = if (keyFirst) "key first" else "key second"
+      test(s"every read face equals the model ($layout layout, $order)") {
         wh: Unit
         var id = 0
-        val prop = Prop.forAll(genScenario(layout)) { sc =>
+        val prop = Prop.forAll(genScenario(layout, keyFirst)) { sc =>
           id += 1
           run(sc, id)
           true
@@ -200,7 +207,8 @@ class ReadFacesSpec extends SparkSpec {
 
 object ReadFacesSpec {
   final case class Rec(k: Long, v: Long, s: String, tier: Option[Long])
-  final case class Scenario(layout: String, n: Int, init: Seq[Rec],
+  final case class Scenario(layout: String, keyFirst: Boolean, n: Int,
+                            init: Seq[Rec],
                             b1: Seq[Rec], d1: Seq[Long], b2: Seq[Rec],
                             mor: Seq[Long])
   final case class Pred(name: String, col: Column, keep: Rec => Boolean)
