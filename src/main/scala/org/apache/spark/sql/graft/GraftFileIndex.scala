@@ -55,16 +55,8 @@ final class GraftFileIndex(spark: SparkSession, dir: String,
   private def bucketPath(b: Long): Path =
     new Path(PartitionedUpsert.resolveRel(dir, manifest.buckets(b)))
 
-  /** Data files of bucket `b`: one listing, hidden files skipped (the
-    * rule Spark's own file index applies). */
-  private def listBucket(b: Long): Seq[FileStatus] = {
-    val p = bucketPath(b)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
-      .filter { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }.toSeq
-  }
+  private def listBucket(b: Long): Seq[FileStatus] =
+    GraftFileIndex.listBucket(spark, bucketPath(b))
 
   private def route(values: Seq[Any]): Seq[Long] = {
     val toCatalyst = CatalystTypeConverters.createToCatalystConverter(
@@ -141,6 +133,23 @@ object GraftFileIndex {
 
   private val routers =
     new ConcurrentHashMap[(String, Int, Seq[Long], DataType), Expression]()
+  private val listings = new ConcurrentHashMap[String, Seq[FileStatus]]()
+
+  /** Data files of the published bucket directory `p`, hidden files
+    * skipped (the rule Spark's own file index applies). Every write
+    * stages into a new, uniquely named directory, so a published one
+    * never changes and its listing is kept: a MERGE's statement read
+    * and its rewrite's base read are two indexes over the same
+    * buckets, and they now list each directory once between them. */
+  private def listBucket(spark: SparkSession, p: Path): Seq[FileStatus] = {
+    if (listings.size > 4096) listings.clear()
+    listings.computeIfAbsent(p.toString, _ =>
+      p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+        .filter { f =>
+          val n = f.getPath.getName
+          f.isFile && !n.startsWith("_") && !n.startsWith(".")
+        }.toSeq)
+  }
 
   /** The router of manifest `m` bound to a one-column key row:
     * `routeFor` analyzed over a local relation (analysis only: no job,

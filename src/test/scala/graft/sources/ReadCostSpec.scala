@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.connector.read.V1Scan
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.GraftFileIndex
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.{BaseRelation, TableScan}
 
@@ -113,5 +114,29 @@ class ReadCostSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         PartitionedUpsert.bucketOf(lit(42L), Buckets)).count()
     assert(read > 0 && read <= bucketRows,
       s"the scan read $read records; the key's bucket holds $bucketRows")
+  }
+
+  test("a published bucket directory is listed once, however many " +
+      "indexes and plans read it") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft_read_cost_list")
+      .toString + "/t"
+    PartitionedUpsert.init((1L to 400L).map(k => (k, k * 10L))
+      .toDF("k", "v").coalesce(1), dir, "k", Buckets)
+    val m = PartitionedUpsert.manifestOrFail(spark, dir)
+    def listed(idx: GraftFileIndex) =
+      idx.listFiles(Nil, Nil).flatMap(_.files.map(_.getPath.getName)).sorted
+    val idx = new GraftFileIndex(spark, dir, m)
+    val first = listed(idx)
+    assert(first.size == Buckets, first)
+    // a file dropped into a published bucket directory afterwards is
+    // not part of the table: neither this index nor a new one over the
+    // same manifest lists the directory again
+    val late = java.nio.file.Paths.get(idx.rootPaths.head.toUri.getPath, "late.parquet")
+    java.nio.file.Files.write(late, Array[Byte](0))
+    assert(listed(idx) == first)
+    assert(listed(new GraftFileIndex(spark, dir, m)) == first)
+    java.nio.file.Files.delete(late)
+    assert(spark.read.format("graft").load(dir).count() == 400L)
   }
 }
